@@ -1,38 +1,11 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      // Two DRIVER-side observability costs serialized whole queries on the
-      // main thread (round-4 jstack evidence, SCALE.md "driver overheads"):
-      // every AQE replan re-renders the full plan description for listener
-      // events (TreeNode.formatArg dominating main), and every Column
-      // construction captures a JVM stack trace for DataFrame error context
-      // (CurrentOrigin.withOrigin -> Thread.getStackTrace — the compare
-      // engine builds thousands of Columns per query). With the UI off the
-      // full plan text serves nothing: cap it, and skip the stack capture.
-      .config("spark.sql.maxPlanStringLength", "65536")
-      .config("spark.sql.dataFrameQueryContext.enabled", "false")
-      // A/B toggle for the wide-plan optimizer cost experiment (SCALE.md):
-      //   SPARK_GRAFT_CONSTRAINT_PROP=false
-      .config("spark.sql.constraintPropagation.enabled",
-        sys.env.getOrElse("SPARK_GRAFT_CONSTRAINT_PROP", "true"))
-      // Shuffle/spill files on tmpfs: the bench host throttles disk burst
-      // IO as well as CPU (SCALE.md), and with 128 GiB of RAM the shuffle
-      // traffic of these queries never needs to touch a real disk.
-      .config("spark.local.dir",
-        sys.env.getOrElse("SPARK_GRAFT_LOCAL_DIR",
-          if (new java.io.File("/dev/shm").isDirectory) "/dev/shm/graft-spark-local"
-          else "target/spark-local"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // A/B toggle for the wide-plan optimizer cost experiment (SCALE.md):
+    //   SPARK_GRAFT_CONSTRAINT_PROP=false
+    val spark = HarnessSession("spark.sql.constraintPropagation.enabled" ->
+      sys.env.getOrElse("SPARK_GRAFT_CONSTRAINT_PROP", "true"))
     // Throttle-aware timing: the host suspends the guest's CPU burst budget
     // after a few minutes of sustained load (SCALE.md "Benchmark-environment
     // noise" — fixed-work canary degrades 2-40x with zero reported steal
@@ -414,15 +387,6 @@ object Bench {
     println(head.toString)
     if (errors.nonEmpty) System.err.println(s"[bench] ${errors.size} queries failed: ${errors.keys.mkString(", ")}")
     graft.operators.Dedup.releaseCaches()
-    val localDir = spark.conf.get("spark.local.dir")
-    spark.stop()
-    // tmpfs shuffle dirs are RAM — don't leave leftovers behind a crash
-    if (localDir.startsWith("/dev/shm/graft-spark-local")) {
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(rm))
-        f.delete(); ()
-      }
-      rm(new java.io.File(localDir))
-    }
+    HarnessSession.stop(spark)
   }
 }

@@ -9,8 +9,9 @@ package graft
   *
   * Construction-time driver actions inside query builders (metadata counts,
   * broadcast probes) run as usual; the query's distributed action does NOT
-  * (nothing is written to a sink), so a full sweep is cheap. Session config
-  * mirrors Bench so the captured plans are the benched plans.
+  * (nothing is written to a sink), so a full sweep is cheap. The session
+  * is Bench's ([[HarnessSession]]), so the captured plans are the benched
+  * plans; only the plan-string cap is raised, so no plan is cut short.
   */
 object DumpPlans {
   def main(args: Array[String]): Unit = {
@@ -19,16 +20,7 @@ object DumpPlans {
     val outDir = args.drop(1).headOption.getOrElse("plans/r16")
     val only = args.drop(2).headOption
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.maxPlanStringLength", "262144")
-      .config("spark.sql.dataFrameQueryContext.enabled", "false")
-      .getOrCreate()
+    val spark = HarnessSession("spark.sql.maxPlanStringLength" -> "262144")
     spark.sparkContext.setLogLevel("ERROR")
     OpsPack.prepareIndexes(spark, sfDir)
     graft.operators.Dedup.releaseCaches()

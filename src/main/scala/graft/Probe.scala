@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.scheduler._
 
 /** Harness-only (like [[DumpPlans]]): run ONE declared query with the
@@ -19,26 +18,13 @@ import org.apache.spark.scheduler._
 object Probe {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.maxPlanStringLength", "65536")
-      .config("spark.sql.dataFrameQueryContext.enabled", "false")
-      .config("spark.local.dir",
-        sys.env.getOrElse("SPARK_GRAFT_LOCAL_DIR",
-          if (new java.io.File("/dev/shm").isDirectory) "/dev/shm/graft-spark-local-probe"
-          else "target/spark-local-probe"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = HarnessSession(
+      "spark.local.dir" -> HarnessSession.localDir("graft-spark-local-probe"))
     case class JobAgg(start: Long, callSite: String, desc: String,
       var stages: Int = 0, var taskNanos: Long = 0L, var maxTaskNanos: Long = 0L,
       var tasks: Int = 0)
     val jobs = new java.util.concurrent.ConcurrentHashMap[Int, JobAgg]()
-    val stageToJob = new java.util.concurrent.ConcurrentHashMap[Int, Int]()
+    val stageToJob = scala.collection.concurrent.TrieMap[Int, Int]()
     val listener = new SparkListener {
       override def onJobStart(js: SparkListenerJobStart): Unit = {
         val cs = Option(js.properties)
@@ -49,8 +35,8 @@ object Probe {
         js.stageIds.foreach(sid => stageToJob.put(sid, js.jobId))
       }
       override def onTaskEnd(te: SparkListenerTaskEnd): Unit = {
-        val j = stageToJob.get(te.stageId)
-        Option(jobs.get(j)).foreach { agg =>
+        // a stage no tracked job started is skipped, not charged to job 0
+        stageToJob.get(te.stageId).flatMap(j => Option(jobs.get(j))).foreach { agg =>
           val rt = Option(te.taskMetrics).map(_.executorRunTime).getOrElse(0L) * 1000000L
           agg.synchronized {
             agg.taskNanos += rt
@@ -98,14 +84,6 @@ object Probe {
       graft.operators.Dedup.releaseCaches()
       OpsPack.releaseSharedFrames()
     }
-    spark.stop()
-    val localDir = spark.conf.get("spark.local.dir")
-    if (localDir.startsWith("/dev/shm/graft-spark-local-probe")) {
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(rm))
-        f.delete(); ()
-      }
-      rm(new java.io.File(localDir))
-    }
+    HarnessSession.stop(spark)
   }
 }

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Scale-sweep harness: replicate the synthetic tables N× with shifted
@@ -21,21 +21,7 @@ object ScaleCheck {
   def main(args: Array[String]): Unit = {
     val mult = sys.env.getOrElse("SPARK_GRAFT_SCALE_MULT", "8").toInt
     val src = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.maxPlanStringLength", "65536")
-      .config("spark.sql.dataFrameQueryContext.enabled", "false")
-      .config("spark.local.dir",
-        sys.env.getOrElse("SPARK_GRAFT_LOCAL_DIR",
-          if (new java.io.File("/dev/shm").isDirectory) "/dev/shm/graft-spark-local"
-          else "target/spark-local"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = HarnessSession()
     import spark.implicits._
 
     val out = s"target/graft_scale_${mult}x"

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare.
@@ -21,27 +20,9 @@ object Verify {
     val Array(sfDir, outDir) = args.take(2)
     val only: Set[String] =
       if (args.length > 2) args(2).split(",").toSet else Set.empty
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      // same driver-overhead caps as Bench (see there): plan-description
-      // rendering per AQE replan + per-Column stack capture are pure
-      // observability costs with the UI off
-      .config("spark.sql.maxPlanStringLength", "65536")
-      .config("spark.sql.dataFrameQueryContext.enabled", "false")
-      // concurrent queries: FAIR keeps one long stage from starving the
-      // short queries queued behind it in FIFO order
-      .config("spark.scheduler.mode", "FAIR")
-      .config("spark.local.dir",
-        sys.env.getOrElse("SPARK_GRAFT_LOCAL_DIR",
-          if (new java.io.File("/dev/shm").isDirectory) "/dev/shm/graft-spark-local"
-          else "target/spark-local"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // concurrent queries: FAIR keeps one long stage from starving the
+    // short queries queued behind it in FIFO order
+    val spark = HarnessSession("spark.scheduler.mode" -> "FAIR")
     new java.io.File(outDir).mkdirs()
     // Dump the oracle SQL FIRST: if the harness kills a long verify run on
     // a wall-clock budget, the queries that DID finish are still checkable

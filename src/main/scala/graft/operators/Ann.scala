@@ -326,9 +326,9 @@ object Ann {
     * the next pass's scope, like the dedup postings). */
   private def lshCandidateScores(a: DataFrame, b: DataFrame,
       vecCol: String, idCol: String, dim: Int, bits: Int, tables: Int): DataFrame = {
-    val sigsA = Parallelize.spread(a).select(col(idCol).as("a_id"),
+    val sigsA = a.select(col(idCol).as("a_id"),
       posexplode(lshTableSignatures(col(vecCol), dim, bits, tables)).as(Seq("tbl", "sig")))
-    val sigsB = Parallelize.spread(b).select(col(idCol).as("b_id"),
+    val sigsB = b.select(col(idCol).as("b_id"),
       posexplode(lshTableSignatures(col(vecCol), dim, bits, tables)).as(Seq("tbl", "sig")))
     val candidates = sigsA.join(sigsB, Seq("tbl", "sig"))
       .select("a_id", "b_id").distinct()
@@ -537,7 +537,7 @@ object Ann {
   def cosineNearDuplicatesMultiTable(
       df: DataFrame, vecCol: String, idCol: String,
       threshold: Double, dim: Int, bits: Int = 16, tables: Int = 8): DataFrame = {
-    val sigs = Parallelize.spread(df).select(col(idCol).as("id"),
+    val sigs = df.select(col(idCol).as("id"),
       posexplode(lshTableSignatures(col(vecCol), dim, bits, tables)).as(Seq("tbl", "sig")))
     val a = sigs.toDF("id1", "tbl", "sig")
     val b = sigs.toDF("id2", "tbl", "sig")

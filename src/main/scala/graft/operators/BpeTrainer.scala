@@ -36,8 +36,7 @@ object BpeTrainer {
     * pre-normalized; the filter also guarantees the paren encoding is
     * unambiguous). */
   def wordFrequencies(df: DataFrame, textCol: String): DataFrame =
-    Parallelize.spread(df)
-      .select(explode(split(trim(col(textCol)), "\\s+")).as("t"))
+    df.select(explode(split(trim(col(textCol)), "\\s+")).as("t"))
       .select(lower(col("t")).as("w"))
       .where(col("w").rlike("^[a-z]+$"))
       .groupBy("w").agg(count(lit(1)).as("c"))

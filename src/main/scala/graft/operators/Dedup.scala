@@ -227,7 +227,7 @@ object Dedup {
       portableHashes: Boolean = false,
       numHashes: Int = 64,
       bands: Int = 16): DataFrame = newCacheScope {
-    val quality = Parallelize.spread(df).where(!TextOps.lowQualityFlag(col(textCol)))
+    val quality = df.where(!TextOps.lowQualityFlag(col(textCol)))
     // two consumers (near-dup discovery + the final anti-join): persist so
     // the fingerprint groupBy + semi-join lineage runs once
     val exact = cacheShared(exactDedup(quality, textCol, idCol))
@@ -247,8 +247,7 @@ object Dedup {
   /** Exact duplicate groups by content hash of `textCol` (normalized md5).
     * Returns one row per group: (fingerprint, keep_id, n_dupes). */
   def exactGroups(df: DataFrame, textCol: String, idCol: String): DataFrame =
-    Parallelize.spread(df)
-      .groupBy(TextOps.fingerprint(col(textCol)).as("fingerprint"))
+    df.groupBy(TextOps.fingerprint(col(textCol)).as("fingerprint"))
       .agg(min(col(idCol)).as("keep_id"), count(lit(1)).as("n"))
 
   /** Exact dedup: keep the minimum-id row per content hash.
@@ -271,7 +270,7 @@ object Dedup {
   def exactDedup(df: DataFrame, textCol: String, idCol: String): DataFrame = {
     val cols = df.columns.toSeq
     val rowStruct = struct(cols.map(col): _*)
-    Parallelize.spread(df).groupBy(TextOps.fingerprint(col(textCol)).as("__graft_fp"))
+    df.groupBy(TextOps.fingerprint(col(textCol)).as("__graft_fp"))
       .agg(min_by(rowStruct, struct(col(idCol).as("__k") +: cols.map(col): _*))
         .as("__graft_row"))
       .select(cols.map(c => col(s"__graft_row.`$c`").as(c)): _*)
@@ -293,8 +292,7 @@ object Dedup {
       maxDocFrequency: Long = Long.MaxValue): DataFrame = newCacheScope {
     // postings carry 64-bit gram hashes, not strings: ~4× smaller shuffle
     // and primitive join keys (collision odds at 64 bits are negligible)
-    val grams = Parallelize.spread(df)
-      .select(col(idCol).as("id"), TextOps.wordShingles(col(textCol), n).as("g"))
+    val grams = df.select(col(idCol).as("id"), TextOps.wordShingles(col(textCol), n).as("g"))
       .select(col("id"), explode(col("g")).as("gs"))
       .select(col("id"), xxhash64(col("gs")).as("g"))
     val filteredPlan =
@@ -466,7 +464,7 @@ object Dedup {
       shingleSize: Int = 3): DataFrame = newCacheScope {
     // shared by the signature pass and both verification sides — persist so
     // the regex shingling runs once (same rationale as jaccardPairs)
-    val shingled = Parallelize.spread(df).select(col(idCol).as("id"),
+    val shingled = df.select(col(idCol).as("id"),
       TextOps.wordShingles(col(textCol), shingleSize).as("g"))
       .transform(cacheShared)
     val withSig = minhashSignaturesMd5(shingled, numHashes)
@@ -521,7 +519,7 @@ object Dedup {
       require(existing == prefixBits,
         s"index at $path was written with prefixBits=$existing, append requested $prefixBits")
     }
-    val shingled = Parallelize.spread(corpus).select(col(idCol).as("id"),
+    val shingled = corpus.select(col(idCol).as("id"),
       TextOps.wordShingles(col(textCol), shingleSize).as("g"))
     bandedSignaturePostings(minhashSignaturesMd5(shingled, numHashes), "id",
       numHashes, bands)
@@ -606,7 +604,7 @@ object Dedup {
       shingleSize: Int = 3): DataFrame = newCacheScope {
     val spark = batch.sparkSession
     // two consumers (signatures + verification side 1): shingle once
-    val batchSh = cacheShared(Parallelize.spread(batch).select(col(idCol).as("id"),
+    val batchSh = cacheShared(batch.select(col(idCol).as("id"),
       TextOps.wordShingles(col(textCol), shingleSize).as("g")))
     val batchPost = bandedSignaturePostings(
       minhashSignaturesMd5(batchSh, numHashes), "id", numHashes, bands)
@@ -626,7 +624,7 @@ object Dedup {
     // verification re-shingles ONLY candidate corpus rows
     val candIds = cands.select(col("corpus_id")).distinct()
       .withColumnRenamed("corpus_id", "__graft_cand_id")
-    val corpusCand = Parallelize.spread(corpusForIds(candIds))
+    val corpusCand = corpusForIds(candIds)
       .join(broadcast(candIds), col(idCol) === col("__graft_cand_id"), "left_semi")
     val g1 = batchSh.toDF("batch_id", "g1")
     val g2 = corpusCand.select(col(idCol).as("corpus_id"),
@@ -661,7 +659,7 @@ object Dedup {
     // one shingle computation shared by signature and verification; grams
     // carried as 64-bit hashes (primitive arrays intersect/join faster);
     // persisted so the shingling stage executes once, not per consumer
-    val shingled = Parallelize.spread(df).select(col(idCol).as("id"),
+    val shingled = df.select(col(idCol).as("id"),
       transform(TextOps.wordShingles(col(textCol), shingleSize),
         s => xxhash64(s)).as("g"))
       .transform(cacheShared)
@@ -695,10 +693,9 @@ object Dedup {
       w: Int = 4,
       minShared: Int = 2,
       maxDocFrequency: Long = Long.MaxValue): DataFrame = newCacheScope {
-    val raw = Parallelize.spread(df)
-      .select(col(idCol).as("id"),
-        explode(array_distinct(
-          graft.functions.WinnowFingerprints.fingerprints(col(textCol), k, w))).as("fp"))
+    val raw = df.select(col(idCol).as("id"),
+      explode(array_distinct(
+        graft.functions.WinnowFingerprints.fingerprints(col(textCol), k, w))).as("fp"))
     fingerprintPairs(raw, minShared, maxDocFrequency)
   }
 
@@ -724,7 +721,7 @@ object Dedup {
   def winnowFingerprintsPortable(
       df: DataFrame, textCol: String, idCol: String,
       k: Int, w: Int): DataFrame =
-    Parallelize.spread(df).select(col(idCol).as("id"),
+    df.select(col(idCol).as("id"),
       explode(graft.functions.PortableWinnowMd5.fingerprints(col(textCol), k, w)).as("fp"))
 
   /** [[winnowPairs]] over the portable hash family (oracle-checkable). */
@@ -782,7 +779,7 @@ object Dedup {
       .select(col(idCol).as(out), TextOps.wordShingles(col(textCol), n).as("g"))
       .select(col(out), explode(col("g")).as("gs"))
       .select(col(out), xxhash64(col("gs")).as("g"))
-    grams(Parallelize.spread(corpus), "corpus_id")
+    grams(corpus, "corpus_id")
       .join(broadcast(grams(probe, "probe_id")), Seq("g"))
       .groupBy("corpus_id", "probe_id").agg(count(lit(1)).as("overlap"))
       .where(col("overlap") >= minOverlap)
@@ -812,9 +809,8 @@ object Dedup {
       benchCol: String,
       n: Int = 3,
       minOverlap: Long = 1L): DataFrame = {
-    val corpusGrams = Parallelize.spread(corpus)
-      .select(col(idCol).as("corpus_id"),
-        explode(TextOps.wordShingles(col(textCol), n)).as("gs"))
+    val corpusGrams = corpus.select(col(idCol).as("corpus_id"),
+      explode(TextOps.wordShingles(col(textCol), n)).as("gs"))
       .select(col("corpus_id"), xxhash64(col("gs")).as("g"))
     val probeGrams = probe
       .where(col(benchCol).isNotNull)
@@ -878,7 +874,7 @@ object Dedup {
         element_at(bits, shiftright(pos, 6).cast("int") + 1)
           .bitwiseAND(call_function("shiftleft", lit(1L), (pos % 64).cast("int"))) =!= 0
       }.reduce(_ && _)
-    grams(Parallelize.spread(corpus), "corpus_id")
+    grams(corpus, "corpus_id")
       .where(mightContain(col("g")))
       .join(broadcast(probeGrams), Seq("g"))
       .groupBy("corpus_id", "probe_id").agg(count(lit(1)).as("overlap"))
@@ -906,7 +902,7 @@ object Dedup {
       .select(col(out), xxhash64(col("gs")).as("g"))
     val probeGrams = grams(probe, "probe_id")
     val probeSizes = probeGrams.groupBy("probe_id").agg(count(lit(1)).as("probe_sz"))
-    grams(Parallelize.spread(corpus), "corpus_id")
+    grams(corpus, "corpus_id")
       .join(broadcast(probeGrams), Seq("g"))
       .groupBy("corpus_id", "probe_id").agg(count(lit(1)).as("overlap"))
       .join(broadcast(probeSizes), "probe_id")
@@ -927,9 +923,8 @@ object Dedup {
   def lineDocFrequency(
       df: DataFrame, textCol: String, idCol: String,
       delimiterPattern: String = "\n"): DataFrame =
-    Parallelize.spread(df)
-      .select(col(idCol).as("id"),
-        explode(split(col(textCol), delimiterPattern)).as("line"))
+    df.select(col(idCol).as("id"),
+      explode(split(col(textCol), delimiterPattern)).as("line"))
       .distinct()
       .groupBy("line").agg(count(lit(1)).as("df"))
 
@@ -953,7 +948,7 @@ object Dedup {
     val hot = lineDocFrequency(df, textCol, idCol, delimiterPattern)
       .filter(col("df") >= minDocFrequency)
       .select(col("line").as("hot_line"))
-    val lines = Parallelize.spread(df).select(col(idCol).as("id"),
+    val lines = df.select(col(idCol).as("id"),
       posexplode(split(col(textCol), delimiterPattern)).as(Seq("pos", "line")))
     val kept = lines.join(hot, col("line") === col("hot_line"), "left_anti")
       .groupBy("id")
@@ -997,7 +992,7 @@ object Dedup {
     * (same rationale as minhashSignatures): token postings → 64 conditional
     * sums per id → assemble the 64-bit hash. Returns (id, sh). */
   def simhashSignatures(df: DataFrame, textCol: String, idCol: String): DataFrame = {
-    val toks = Parallelize.spread(df)
+    val toks = df
       .select(col(idCol).as("id"), explode(split(trim(lower(col(textCol))), "\\s+")).as("t"))
       .select(col("id"), xxhash64(col("t")).as("h"))
     val bitSums = (0 until 64).map(j =>
@@ -1017,9 +1012,8 @@ object Dedup {
     * parse + the same bit shifts), so the near-dup result gets a real
     * oracle. Returns (id, sh). */
   def simhashSignaturesMd5(df: DataFrame, textCol: String, idCol: String): DataFrame =
-    simhashSignaturesMd5FromTokens(Parallelize.spread(df)
-      .select(col(idCol).as("id"),
-        explode(split(trim(lower(col(textCol))), "\\s+")).as("t")))
+    simhashSignaturesMd5FromTokens(df.select(col(idCol).as("id"),
+      explode(split(trim(lower(col(textCol))), "\\s+")).as("t")))
 
   /** The md5 SimHash aggregation over an already-tokenized (id, t) frame —
     * the shared core of [[simhashSignaturesMd5]], exposed so non-text
@@ -1111,7 +1105,7 @@ object Dedup {
       idCol: String,
       centroids: Array[Array[Double]],
       threshold: Double): DataFrame = newCacheScope {
-    val clustered = cacheShared(Ivf.withCluster(Parallelize.spread(df), vecCol, centroids))
+    val clustered = cacheShared(Ivf.withCluster(df, vecCol, centroids))
     val sides = clustered.select(col("cluster"), col(idCol).as("id"),
       col(vecCol).as("v"), Ann.norm(col(vecCol)).as("nrm"))
     val a = sides.toDF("cluster", "id1", "v1", "nrm1")
@@ -1173,8 +1167,7 @@ object Dedup {
     // The >= L guard is load-bearing twice over: it drops NULL/short texts,
     // and it keeps sequence()'s stop >= start (Spark's sequence DESCENDS
     // when stop < start rather than returning empty).
-    val positions = Parallelize.spread(df)
-      .select(col(idCol).as("id"), col(textCol).as("__graft_text"))
+    val positions = df.select(col(idCol).as("id"), col(textCol).as("__graft_text"))
       .where(length(col("__graft_text")) >= L)
       .select(col("id"), col("__graft_text"),
         explode(sequence(lit(1), length(col("__graft_text")) - (L - 1))).as("pos"))

@@ -330,8 +330,7 @@ object HeavyHitters {
     * [[TextOps.vocabulary]] (`regexp_split_to_array(trim(text), '\s+')`
     * on the DuckDB side). */
   def tokenStream(df: DataFrame, textCol: String): DataFrame =
-    Parallelize.spread(df)
-      .select(explode(split(trim(col(textCol)), "\\s+")).as("token"))
+    df.select(explode(split(trim(col(textCol)), "\\s+")).as("token"))
 
   /** [[tokenStream]] with a grouping column riding each token — the input
     * shape [[heavyHittersByGroup]] consumes. `carry` columns (e.g. the
@@ -340,7 +339,6 @@ object HeavyHitters {
     * consumer and oracle mirrors. */
   def tokenStreamByGroup(df: DataFrame, groupCol: String, textCol: String,
       carry: String*): DataFrame =
-    Parallelize.spread(df)
-      .select(Seq(col(groupCol)) ++ carry.map(col) :+
-        explode(split(trim(col(textCol)), "\\s+")).as("token"): _*)
+    df.select(Seq(col(groupCol)) ++ carry.map(col) :+
+      explode(split(trim(col(textCol)), "\\s+")).as("token"): _*)
 }

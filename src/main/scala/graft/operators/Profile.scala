@@ -707,14 +707,8 @@ object Profile {
   private def ksByGroupFromSides(spark: org.apache.spark.sql.SparkSession,
       sides: DataFrame, groupCol: String, buckets: Int): DataFrame = {
     import spark.implicits._
-    // spread BEFORE the per-(g, v) aggregation: `sides` is a narrow
-    // projection straight off the scan, so its partial-agg stage inherits
-    // the scan's split count — 3 tasks at sf0.1 (1.25s of the ranked
-    // query's probe), a no-op at scale where scans carry thousands of
-    // splits (the Parallelize.spread contract)
     val perV = Dedup.cacheShared(
-      Parallelize.spread(sides)
-        .groupBy("g", "v").agg(sum(col("c1")).as("c1"), sum(col("c2")).as("c2")))
+      sides.groupBy("g", "v").agg(sum(col("c1")).as("c1"), sum(col("c2")).as("c2")))
     val stats = perV.groupBy("g")
       .agg(min(col("v")).as("mn"), max(col("v")).as("mx"),
         sum(col("c1")).as("n1"), sum(col("c2")).as("n2"))
@@ -808,10 +802,8 @@ object Profile {
   private def ksFromSides(spark: org.apache.spark.sql.SparkSession,
       sides: DataFrame, buckets: Int): DataFrame = {
     import spark.implicits._
-    // spread before the per-value aggregation — see ksByGroupFromSides
     val perV = Dedup.cacheShared(
-      Parallelize.spread(sides)
-        .groupBy("v").agg(sum(col("c1")).as("c1"), sum(col("c2")).as("c2")))
+      sides.groupBy("v").agg(sum(col("c1")).as("c1"), sum(col("c2")).as("c2")))
     val mm = perV.agg(min(col("v")).as("mn"), max(col("v")).as("mx"),
       sum(col("c1")).as("n1"), sum(col("c2")).as("n2")).first()
     require(!mm.isNullAt(0), "ksStatistic: both inputs are empty")

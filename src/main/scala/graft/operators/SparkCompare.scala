@@ -89,7 +89,7 @@ class SparkCompare(
     df1UnqColumns.isEmpty && df2UnqColumns.isEmpty && intersectColumns.toSet == joinSet
   private val compareColumns: Seq[String] = intersectColumns.filterNot(joinSet)
 
-  import SparkCompare.{Merged, Shape}
+  import SparkCompare.Shape
 
   // ---- shape probe: row count, key-group count, and null-key presence for
   // BOTH inputs in ONE job (each input projects to just its join columns +
@@ -148,7 +148,7 @@ class SparkCompare(
   private val leftFlag = "_merge_left"
   private val rightFlag = "_merge_right"
 
-  private lazy val merged: Merged = parent.map(_.merged).getOrElse {
+  private lazy val merged: DataFrame = parent.map(_.merged).getOrElse {
     var d1 = df1
     var d2 = df2
     var tempJoin = joinColumns
@@ -193,7 +193,7 @@ class SparkCompare(
         .otherwise("both"))
     val dropOrd =
       if (anyDupes) Seq(s"${ordCol}_$n1", s"${ordCol}_$n2") else Nil
-    Merged(withMerge.drop(dropOrd: _*), tempJoin)
+    withMerge.drop(dropOrd: _*)
   }
 
   /** The merged outer join, persisted when cacheIntermediates: every derived
@@ -204,8 +204,8 @@ class SparkCompare(
     * with tolerance variants. */
   private lazy val mergedCached: DataFrame = parent.map(_.mergedCached).getOrElse {
     if (config.cacheIntermediates)
-      merged.outerJoin.persist(StorageLevel.MEMORY_AND_DISK)
-    else merged.outerJoin
+      merged.persist(StorageLevel.MEMORY_AND_DISK)
+    else merged
   }
 
   /** left_only / right_only / both counts, folded into the single stats
@@ -576,7 +576,6 @@ object SparkCompare {
   private final case class Shape(rowCount: Long, keyGroups: Long, nullKeyRows: Long) {
     def hasDupes: Boolean = rowCount > keyGroups
   }
-  private final case class Merged(outerJoin: DataFrame, tempJoinColumns: Seq[String])
 }
 
 object Utils {

@@ -206,7 +206,7 @@ object TextOps {
     * top_token_ratio, top_bigram_ratio). */
   def repetitionStats(df: DataFrame, textCol: String, idCol: String): DataFrame = {
     val norm = regexp_replace(trim(col(textCol)), "\\s+", " ")
-    val grams = Parallelize.spread(df).select(col(idCol).as("id"),
+    val grams = df.select(col(idCol).as("id"),
       explode(concat(split(norm, " "),
         wordShinglesAllFromNormalized(norm, 2))).as("g"))
     val isTok = !col("g").contains(" ")
@@ -242,8 +242,7 @@ object TextOps {
     * sort); K is bounded (a vocabulary), so the result is driver-safe. */
   def vocabulary(df: DataFrame, textCol: String, topK: Int): DataFrame = {
     require(topK > 0, s"topK must be positive, got $topK")
-    Parallelize.spread(df)
-      .select(explode(split(trim(col(textCol)), "\\s+")).as("token"))
+    df.select(explode(split(trim(col(textCol)), "\\s+")).as("token"))
       .groupBy("token").agg(count(lit(1)).as("freq"))
       .orderBy(col("freq").desc, col("token"))
       .limit(topK)
@@ -265,7 +264,7 @@ object TextOps {
     * so only k rows per document survive. No Window node anywhere. */
   def tfidfKeywords(df: DataFrame, textCol: String, idCol: String, k: Int): DataFrame = {
     require(k > 0, s"k must be positive, got $k")
-    val toks = Parallelize.spread(df).select(col(idCol).as("id"),
+    val toks = df.select(col(idCol).as("id"),
       explode(split(trim(col(textCol)), "\\s+")).as("token"))
     // tf's aggregation exchange is reused across the document-frequency
     // rollup and the score join within the one action — no explicit cache
@@ -295,7 +294,7 @@ object TextOps {
   def inVocabStats(df: DataFrame, textCol: String, idCol: String, topK: Int): DataFrame = {
     val vocab = vocabulary(df, textCol, topK)
       .select(col("token"), lit(1L).as("in_v"))
-    val toks = Parallelize.spread(df).select(col(idCol).as("id"),
+    val toks = df.select(col(idCol).as("id"),
       explode(split(trim(col(textCol)), "\\s+")).as("token"))
     toks.join(broadcast(vocab), Seq("token"), "left")
       .groupBy("id")
@@ -396,9 +395,8 @@ object TextOps {
     require(weights.nonEmpty, "weights must be non-empty")
     val f = weights.length
     val w = typedlit(weights)
-    Parallelize.spread(df)
-      .select(col(idCol).as("id"),
-        explode(split(trim(col(textCol)), "\\s+")).as("t"))
+    df.select(col(idCol).as("id"),
+      explode(split(trim(col(textCol)), "\\s+")).as("t"))
       .select(col("id"),
         element_at(w, (pmod(Dedup.md5Long48(col("t").cast("binary")), lit(f.toLong)) + 1)
           .cast("int")).as("wt"))
@@ -444,8 +442,7 @@ object TextOps {
       s"overlap must be in [0, chunkTokens), got $overlap")
     val stride = chunkTokens - overlap
     val toks = split(trim(col(textCol)), "\\s+")
-    Parallelize.spread(df)
-      .select(col(idCol).as("id"), toks.as("__graft_t"))
+    df.select(col(idCol).as("id"), toks.as("__graft_t"))
       .select(col("id"), col("__graft_t"),
         posexplode(sequence(lit(0),
           greatest(size(col("__graft_t")) - lit(overlap + 1), lit(0)),
@@ -487,7 +484,7 @@ object TextOps {
       n: Int = 2): DataFrame = {
     require(n >= 1, s"n must be >= 1, got $n")
     val norm = regexp_replace(trim(col(textCol)), "\\s+", " ")
-    val grams = Parallelize.spread(df).select(col(idCol).as("id"),
+    val grams = df.select(col(idCol).as("id"),
       explode(if (n == 1) split(norm, " ") else wordShinglesAllFromNormalized(norm, n)).as("g"))
     // docCounts' aggregation exchange is reused across the corpus-count
     // rollup and the leave-one-out join — no explicit cache (r16 A/B)

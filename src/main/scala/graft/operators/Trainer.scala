@@ -52,9 +52,8 @@ object Trainer {
     require(scale > 0 && scale % 2 == 0, s"scale must be positive and even, got $scale")
     require(lrDen > 0, s"lrDen must be > 0, got $lrDen")
     val feats = Dedup.cacheShared(
-      Parallelize.spread(df)
-        .select(col(idCol).as("id"), col(labelCol).cast("long").as("y"),
-          explode(split(trim(col(textCol)), "\\s+")).as("t"))
+      df.select(col(idCol).as("id"), col(labelCol).cast("long").as("y"),
+        explode(split(trim(col(textCol)), "\\s+")).as("t"))
         .select(col("id"), col("y"),
           pmod(Dedup.md5Long48(col("t").cast("binary")), lit(numFeatures.toLong)).as("f"))
         .distinct())

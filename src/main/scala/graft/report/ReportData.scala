@@ -1,5 +1,7 @@
 package graft.report
 
+import scala.collection.immutable.ListMap
+
 /** Immutable report data model (reference: datacompy/report.py:50-331). */
 final case class ColumnSummary(
     commonColumns: Int,
@@ -74,59 +76,55 @@ final case class ReportData(
 
   def save(path: String): Unit = ReportData.saveHtml(render, path)
 
-  /** JSON mirror of the reference's `to_dict` (report.py:313-322);
-    * hand-rolled encoder, no dependencies. */
-  def toJson: String = Json.obj(
-    "df1_name" -> Json.str(df1Name),
-    "df2_name" -> Json.str(df2Name),
-    "df1_shape" -> Json.arr(Json.num(df1Shape._1), Json.num(df1Shape._2)),
-    "df2_shape" -> Json.arr(Json.num(df2Shape._1), Json.num(df2Shape._2)),
-    "column_count" -> Json.num(columnCount),
-    "column_summary" -> Json.obj(
-      "common_columns" -> Json.num(columnSummary.commonColumns),
-      "df1_unique" -> Json.num(columnSummary.df1Unique),
-      "df1_unique_columns" -> Json.arr(columnSummary.df1UniqueColumns.map(Json.str): _*),
-      "df2_unique" -> Json.num(columnSummary.df2Unique),
-      "df2_unique_columns" -> Json.arr(columnSummary.df2UniqueColumns.map(Json.str): _*),
-      "df1_name" -> Json.str(columnSummary.df1Name),
-      "df2_name" -> Json.str(columnSummary.df2Name)),
-    "row_summary" -> Json.obj(
-      "match_columns" -> Json.arr(rowSummary.matchColumns.map(Json.str): _*),
-      "has_duplicates" -> Json.bool(rowSummary.hasDuplicates),
-      "abs_tol" -> Json.raw(rowSummary.absTol),
-      "rel_tol" -> Json.raw(rowSummary.relTol),
-      "common_rows" -> Json.num(rowSummary.commonRows),
-      "df1_unique" -> Json.num(rowSummary.df1Unique),
-      "df2_unique" -> Json.num(rowSummary.df2Unique),
-      "unequal_rows" -> Json.num(rowSummary.unequalRows),
-      "equal_rows" -> Json.num(rowSummary.equalRows),
-      "df1_name" -> Json.str(rowSummary.df1Name),
-      "df2_name" -> Json.str(rowSummary.df2Name)),
-    "column_comparison" -> Json.obj(
-      "unequal_columns" -> Json.num(columnComparison.unequalColumns),
-      "equal_columns" -> Json.num(columnComparison.equalColumns),
-      "unequal_values" -> Json.num(columnComparison.unequalValues)),
-    "mismatch_stats" -> Json.obj(
-      "has_mismatches" -> Json.bool(mismatchStats.hasMismatches),
-      "has_samples" -> Json.bool(mismatchStats.hasSamples),
-      "stats" -> Json.arr(mismatchStats.stats.map(s => Json.obj(
-        "column" -> Json.str(s.column),
-        "dtype1" -> Json.str(s.dtype1),
-        "dtype2" -> Json.str(s.dtype2),
-        "unequal_cnt" -> Json.num(s.unequalCnt),
-        "max_diff" -> Json.num(s.maxDiff),
-        "null_diff" -> Json.num(s.nullDiff),
-        "rel_tol" -> Json.num(s.relTol),
-        "abs_tol" -> Json.num(s.absTol))): _*),
-      "samples" -> Json.arr(mismatchStats.samples.map(Json.str): _*),
-      "df1_name" -> Json.str(mismatchStats.df1Name),
-      "df2_name" -> Json.str(mismatchStats.df2Name)),
-    "df1_unique_rows" -> Json.obj(
-      "has_rows" -> Json.bool(df1UniqueRows.hasRows),
-      "rows" -> Json.str(df1UniqueRows.rows)),
-    "df2_unique_rows" -> Json.obj(
-      "has_rows" -> Json.bool(df2UniqueRows.hasRows),
-      "rows" -> Json.str(df2UniqueRows.rows)))
+  /** The reference's `to_dict` (report.py:313-322) as one ordered tree:
+    * [[toJson]] encodes it, and [[TemplateReport]] templates look paths
+    * up in it. */
+  def toMap: ListMap[String, Any] = ListMap(
+    "df1_name" -> df1Name,
+    "df2_name" -> df2Name,
+    "df1_shape" -> Seq(df1Shape._1, df1Shape._2),
+    "df2_shape" -> Seq(df2Shape._1, df2Shape._2),
+    "column_count" -> columnCount,
+    "column_summary" -> ListMap(
+      "common_columns" -> columnSummary.commonColumns,
+      "df1_unique" -> columnSummary.df1Unique,
+      "df1_unique_columns" -> columnSummary.df1UniqueColumns,
+      "df2_unique" -> columnSummary.df2Unique,
+      "df2_unique_columns" -> columnSummary.df2UniqueColumns,
+      "df1_name" -> columnSummary.df1Name,
+      "df2_name" -> columnSummary.df2Name),
+    "row_summary" -> ListMap(
+      "match_columns" -> rowSummary.matchColumns,
+      "has_duplicates" -> rowSummary.hasDuplicates,
+      "abs_tol" -> Json.Raw(rowSummary.absTol),
+      "rel_tol" -> Json.Raw(rowSummary.relTol),
+      "common_rows" -> rowSummary.commonRows,
+      "df1_unique" -> rowSummary.df1Unique,
+      "df2_unique" -> rowSummary.df2Unique,
+      "unequal_rows" -> rowSummary.unequalRows,
+      "equal_rows" -> rowSummary.equalRows,
+      "df1_name" -> rowSummary.df1Name,
+      "df2_name" -> rowSummary.df2Name),
+    "column_comparison" -> ListMap(
+      "unequal_columns" -> columnComparison.unequalColumns,
+      "equal_columns" -> columnComparison.equalColumns,
+      "unequal_values" -> columnComparison.unequalValues),
+    "mismatch_stats" -> ListMap(
+      "has_mismatches" -> mismatchStats.hasMismatches,
+      "has_samples" -> mismatchStats.hasSamples,
+      "stats" -> mismatchStats.stats.map(s => ListMap(
+        "column" -> s.column, "dtype1" -> s.dtype1, "dtype2" -> s.dtype2,
+        "unequal_cnt" -> s.unequalCnt, "max_diff" -> s.maxDiff,
+        "null_diff" -> s.nullDiff, "rel_tol" -> s.relTol, "abs_tol" -> s.absTol)),
+      "samples" -> mismatchStats.samples,
+      "df1_name" -> mismatchStats.df1Name,
+      "df2_name" -> mismatchStats.df2Name),
+    "df1_unique_rows" -> ListMap(
+      "has_rows" -> df1UniqueRows.hasRows, "rows" -> df1UniqueRows.rows),
+    "df2_unique_rows" -> ListMap(
+      "has_rows" -> df2UniqueRows.hasRows, "rows" -> df2UniqueRows.rows))
+
+  def toJson: String = Json.encode(toMap)
 
   override def toString: String = render
 }
@@ -145,8 +143,25 @@ object ReportData {
   }
 }
 
-/** Minimal dependency-free JSON emitter. */
+/** Minimal dependency-free JSON emitter. [[encode]] writes a tree such as
+  * [[ReportData.toMap]]: maps (in iteration order), sequences, strings,
+  * booleans, integers, doubles and [[Json.Raw]]. */
 object Json {
+  /** Encoded by [[raw]]: a bare JSON number when its text is one, else a
+    * string (a tolerance is `0.1` or `"{'v': 0.1}"`); shows as its text. */
+  final case class Raw(text: String) {
+    override def toString: String = text
+  }
+
+  def encode(v: Any): String = v match {
+    case s: String => str(s)
+    case Raw(s) => raw(s)
+    case d: Double => num(d)
+    case m: Map[_, _] => obj(m.toSeq.map { case (k, x) => k.toString -> encode(x) }: _*)
+    case xs: Seq[_] => arr(xs.map(encode): _*)
+    case other => other.toString // Boolean, Int, Long
+  }
+
   def str(s: String): String = "\"" + s.flatMap {
     case '"' => "\\\""
     case '\\' => "\\\\"

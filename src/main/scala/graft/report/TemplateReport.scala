@@ -19,51 +19,8 @@ object TemplateReport {
 
   private type Ctx = Map[String, Any]
 
-  /** The template context — same keys as `ReportData.toJson`. */
-  def context(d: ReportData): Ctx = Map(
-    "df1_name" -> d.df1Name,
-    "df2_name" -> d.df2Name,
-    "df1_shape" -> Seq(d.df1Shape._1, d.df1Shape._2),
-    "df2_shape" -> Seq(d.df2Shape._1, d.df2Shape._2),
-    "column_count" -> d.columnCount,
-    "column_summary" -> Map(
-      "common_columns" -> d.columnSummary.commonColumns,
-      "df1_unique" -> d.columnSummary.df1Unique,
-      "df1_unique_columns" -> d.columnSummary.df1UniqueColumns,
-      "df2_unique" -> d.columnSummary.df2Unique,
-      "df2_unique_columns" -> d.columnSummary.df2UniqueColumns,
-      "df1_name" -> d.columnSummary.df1Name,
-      "df2_name" -> d.columnSummary.df2Name),
-    "row_summary" -> Map(
-      "match_columns" -> d.rowSummary.matchColumns,
-      "has_duplicates" -> d.rowSummary.hasDuplicates,
-      "abs_tol" -> d.rowSummary.absTol,
-      "rel_tol" -> d.rowSummary.relTol,
-      "common_rows" -> d.rowSummary.commonRows,
-      "df1_unique" -> d.rowSummary.df1Unique,
-      "df2_unique" -> d.rowSummary.df2Unique,
-      "unequal_rows" -> d.rowSummary.unequalRows,
-      "equal_rows" -> d.rowSummary.equalRows,
-      "df1_name" -> d.rowSummary.df1Name,
-      "df2_name" -> d.rowSummary.df2Name),
-    "column_comparison" -> Map(
-      "unequal_columns" -> d.columnComparison.unequalColumns,
-      "equal_columns" -> d.columnComparison.equalColumns,
-      "unequal_values" -> d.columnComparison.unequalValues),
-    "mismatch_stats" -> Map(
-      "has_mismatches" -> d.mismatchStats.hasMismatches,
-      "has_samples" -> d.mismatchStats.hasSamples,
-      "stats" -> d.mismatchStats.stats.map(s => Map(
-        "column" -> s.column, "dtype1" -> s.dtype1, "dtype2" -> s.dtype2,
-        "unequal_cnt" -> s.unequalCnt, "max_diff" -> s.maxDiff,
-        "null_diff" -> s.nullDiff, "rel_tol" -> s.relTol, "abs_tol" -> s.absTol)),
-      "samples" -> d.mismatchStats.samples,
-      "df1_name" -> d.mismatchStats.df1Name,
-      "df2_name" -> d.mismatchStats.df2Name),
-    "df1_unique_rows" -> Map(
-      "has_rows" -> d.df1UniqueRows.hasRows, "rows" -> d.df1UniqueRows.rows),
-    "df2_unique_rows" -> Map(
-      "has_rows" -> d.df2UniqueRows.hasRows, "rows" -> d.df2UniqueRows.rows))
+  /** The template context: the [[ReportData.toMap]] tree `toJson` encodes. */
+  def context(d: ReportData): Ctx = d.toMap
 
   def renderFile(d: ReportData, templatePath: String): String = {
     val tpl = java.nio.file.Files.readString(java.nio.file.Paths.get(templatePath))
@@ -90,6 +47,7 @@ object TemplateReport {
     case None | Some(null) => false
     case Some(b: Boolean) => b
     case Some(s: String) => s.nonEmpty
+    case Some(r: Json.Raw) => r.text.nonEmpty
     case Some(s: Seq[_]) => s.nonEmpty
     case Some(n: Int) => n != 0
     case Some(n: Long) => n != 0L

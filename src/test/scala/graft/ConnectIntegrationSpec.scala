@@ -474,6 +474,23 @@ class ConnectIntegrationSpec extends SparkTestBase with BeforeAndAfterAll {
       java.nio.file.Paths.get(root))
   }
 
+  test("text vocabulary and exact dedup groups run identically through a " +
+    "live Connect session (plain DataFrame plans, no driver-side RDD access)") {
+    def run(s: SparkSession): (Seq[String], Seq[String]) = withActive(s) {
+      val df = s.sql("SELECT * FROM VALUES (1L, 'the cat  sat'), " +
+        "(2L, 'The cat sat '), (3L, 'a dog ran'), (4L, 'the cat sat'), " +
+        "(5L, 'a dog ran far'), (6L, CAST(NULL AS STRING)) t(id, text)")
+      (graft.operators.TextOps.vocabulary(df, "text", 4)
+        .collect().map(_.toString).toSeq,
+        graft.operators.Dedup.exactGroups(df, "text", "id")
+          .orderBy("keep_id").collect().map(_.toString).toSeq)
+    }
+    val viaConnect = run(client)
+    val classic = run(spark)
+    assert(viaConnect == classic)
+    assert(classic._1.size == 4 && classic._2.size == 4)
+  }
+
   test("an uninstalled function name surfaces UNRESOLVED_ROUTINE naming the " +
     "function (the documented no-fallback failure mode)") {
     val name = LshPlanes.functionName(9, 9, 9) // parameterized: never injected

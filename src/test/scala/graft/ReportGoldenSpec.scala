@@ -115,4 +115,21 @@ class ReportGoldenSpec extends SparkTestBase {
       joinColumns = Seq("id"), absTol = ToleranceSpec.of(0.1)))
     check("mixed", c.report())
   }
+
+  test("report_json (buildReportData().toJson: mismatches, unique rows, " +
+    "per-column tolerance dict)") {
+    val a = one(Seq(
+      (1, "alpha", 10.0, 1L), (2, "be\"ta", 20.0, 2L), (3, "gamma", 30.0, 3L),
+      (5, "eps\nilon", 50.0, 5L)
+    ).toDF("id", "s", "v", "n").orderBy("id"))
+    val b = one(Seq(
+      (1, "alpha", 10.05, 1L), (2, "BETA", 20.5, 7L), (3, "gamma", 30.0, 3L),
+      (4, "delta", 40.0, 4L)
+    ).toDF("id", "s", "v", "n").orderBy("id"))
+    val c = new SparkCompare(spark, a, b, CompareConfig(
+      joinColumns = Seq("id"), df1Name = "left", df2Name = "right",
+      absTol = ToleranceSpec(0.01, Map("v" -> 0.1)),
+      relTol = ToleranceSpec.of(0.001)))
+    check("report_json", c.buildReportData().toJson)
+  }
 }
