@@ -240,8 +240,12 @@ object Bench {
       val v = OpsPack.queryDefVersions.getOrElse(name, 1)
       if (v <= 1) name else s"$name@v$v"
     }
+    // The committed minimums are read from the tracked file in the working
+    // directory; the updated history goes under target/, so a bench run
+    // never edits a tracked file.
     val sfName = new java.io.File(sfDir).getName
-    val histPath = java.nio.file.Paths.get(s"bench_history_$sfName.json")
+    val histName = s"bench_history_$sfName.json"
+    val histPath = java.nio.file.Paths.get(histName)
     val prior: Map[String, Double] =
       if (java.nio.file.Files.exists(histPath))
         try "\"([^\"]+)\"\\s*:\\s*([0-9.eE+-]+)".r
@@ -264,7 +268,8 @@ object Bench {
       }
       k -> m
     }
-    try java.nio.file.Files.writeString(histPath,
+    try java.nio.file.Files.writeString(
+      java.nio.file.Files.createDirectories(java.nio.file.Paths.get("target")).resolve(histName),
       merged.map { case (k, v) => s"${jstr(k)}:$v" }
         .mkString("{", ",", "}") + "\n")
     catch { case e: Throwable =>
@@ -370,20 +375,24 @@ object Bench {
       s""","deltas":$deltasJson,"n_deltas":${deltaEntries.size},"sf":"$sfDir","full":"target/bench_full.json"}"""
     val head = new StringBuilder(
       s"""{"metric":"total","value":${sec3(total)},"unit":"sec","n_queries":${results.size},"n_errors":${errors.size},"total_min_so_far":${sec3(totalMin)},$canaryJson,$ioCanaryJson,$throttleJson,"queries":{""")
-    var first = true
+    // "n_queries_included" counts the entries that fit, so a reader can
+    // tell a truncated map from a complete one (compare with "n_queries");
+    // the budget reserves the field at its widest value.
+    val includedField = s""","n_queries_included":${results.size}"""
+    var included = 0
     var fits = true
     val it = results.sortBy(-_._2).iterator
     while (fits && it.hasNext) {
       val (k, v) = it.next()
-      val entry = (if (first) "" else ",") + "\"" + k + "\":" + sec3(v)
+      val entry = (if (included == 0) "" else ",") + "\"" + k + "\":" + sec3(v)
       // strict slowest-first PREFIX: stop at the first entry that would
       // overflow the budget (a shorter-named faster query must not
       // displace a slower one)
-      if (head.length + entry.length + 1 + tailFixed.length <= lineBudget) {
-        head.append(entry); first = false
+      if (head.length + entry.length + 1 + includedField.length + tailFixed.length <= lineBudget) {
+        head.append(entry); included += 1
       } else fits = false
     }
-    head.append("}").append(tailFixed)
+    head.append("}").append(s""","n_queries_included":$included""").append(tailFixed)
     println(head.toString)
     if (errors.nonEmpty) System.err.println(s"[bench] ${errors.size} queries failed: ${errors.keys.mkString(", ")}")
     graft.operators.Dedup.releaseCaches()

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Declarative data-quality constraint validation (the deequ-style check
@@ -141,16 +141,53 @@ object Quality {
     val thunks = rowThunk +: (groupThunks ++ refThunks)
     val results: Seq[(String, Long)] =
       if (thunks.size == 1) thunks.head()
-      else {
-        val pool = java.util.concurrent.Executors.newFixedThreadPool(
-          math.min(3, thunks.size))
-        try {
-          val ec = scala.concurrent.ExecutionContext.fromExecutor(pool)
-          val futures = thunks.map(t => scala.concurrent.Future(t())(ec))
-          futures.flatMap(f =>
-            scala.concurrent.Await.result(f, scala.concurrent.duration.Duration.Inf))
-        } finally pool.shutdown()
-      }
+      else runTagged(spark, thunks, parallelism = 3).flatten
     results.toDF("check", "violations")
   }
+
+  /** Runs `thunks` at most `parallelism` at a time on daemon threads, with
+    * every job they start under one job tag of `spark`. After the first
+    * failure the caller keeps cancelling the tag's jobs (a check still
+    * planning when the first cancel lands starts its job later) and the
+    * thunks not yet started are skipped; the failure is rethrown once
+    * every thunk has returned, so no job or pool thread outlives the call.
+    * Results keep the thunks' order. */
+  private def runTagged[T](spark: SparkSession, thunks: Seq[() => T],
+      parallelism: Int): Seq[T] = {
+    import java.util.concurrent.{Callable, Executors, ThreadFactory, TimeUnit}
+    import java.util.concurrent.atomic.{AtomicInteger, AtomicReference}
+    val tag = s"$PoolThreadPrefix${java.util.UUID.randomUUID()}"
+    val failure = new AtomicReference[Throwable]()
+    val threadIds = new AtomicInteger()
+    val pool = Executors.newFixedThreadPool(math.min(parallelism, thunks.size),
+      new ThreadFactory {
+        def newThread(r: Runnable): Thread = {
+          val t = new Thread(r, s"$PoolThreadPrefix${threadIds.incrementAndGet()}")
+          t.setDaemon(true)
+          t
+        }
+      })
+    spark.addTag(tag) // interruptTag resolves the tag on the calling thread
+    try {
+      val futures = try thunks.map { thunk =>
+        pool.submit(new Callable[Option[T]] {
+          def call(): Option[T] =
+            if (failure.get != null) None
+            else {
+              spark.addTag(tag)
+              try Some(thunk())
+              catch { case e: Throwable => failure.compareAndSet(null, e); None }
+              finally spark.removeTag(tag)
+            }
+        })
+      } finally pool.shutdown()
+      while (!pool.awaitTermination(50, TimeUnit.MILLISECONDS))
+        if (failure.get != null) spark.interruptTag(tag)
+      Option(failure.get).foreach(e => throw e)
+      futures.map(_.get().get)
+    } finally spark.removeTag(tag)
+  }
+
+  /** Name prefix of [[runTagged]]'s pool threads. */
+  private[graft] val PoolThreadPrefix = "graft-quality-"
 }

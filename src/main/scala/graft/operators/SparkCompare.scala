@@ -33,6 +33,11 @@ import graft.functions.{CompareOpts, ComparatorPipeline, TypeClasses}
   *     cost no extra scan at all (reference counts each slice,
   *     spark.py:524-531).
   *   - Every count is memoized; nothing is ever recounted.
+  *   - Every sample the report shows (up to `sampleCount` mismatching rows
+  *     per mismatching column, and the first rows of each unique-row slice)
+  *     comes from ONE query over the cached join: two jobs however many
+  *     columns mismatch (reference: one `limit` job per column and per
+  *     slice, spark.py:720-777). See [[sampleTables]].
   *
   * At 100 TB the dominant costs are the two input scans (key-group shape
   * check), the join shuffle, and the one stats pass over the cached
@@ -372,7 +377,12 @@ class SparkCompare(
       (maxDiffView(c1, t1), maxDiffView(c2, t2)) match {
         case (Some(v1), Some(v2)) =>
           val d = abs(v1 - v2)
-          Seq(matchExpr, nullDiffExpr, max(when(isBoth && !isnan(d), d)).as(fMaxDiff(c)))
+          // Byte-equal strings (`StringType` is the binary collation) give a
+          // diff of 0, NaN or NULL, none of which raises the max (NULL reads
+          // as 0.0), so only unequal string pairs pay for the double cast,
+          // which fails row by row on non-numeric text.
+          val differ = if (t1 == StringType && t2 == StringType) c1 =!= c2 else lit(true)
+          Seq(matchExpr, nullDiffExpr, max(when(isBoth && differ && !isnan(d), d)).as(fMaxDiff(c)))
         case _ =>
           Seq(matchExpr, nullDiffExpr)
       }
@@ -385,10 +395,13 @@ class SparkCompare(
       sum(when(col("_merge") === "left_only", 1L).otherwise(0L)).as("__graft_left"),
       sum(when(col("_merge") === "right_only", 1L).otherwise(0L)).as("__graft_right"),
       sum(when(isBoth && allMatchCond, 1L).otherwise(0L)).as("__graft_all_match")) ++ perCol
-    val withMatch = mergedCached.select(
-      mergedCached.columns.map(col).toIndexedSeq ++ matchColumns(mergedCached): _*)
-    withMatch.agg(exprs.head, exprs.tail: _*).first()
+    mergedWithMatch.agg(exprs.head, exprs.tail: _*).first()
   }
+
+  /** The cached join plus one `{col}_match` per compared column, over every
+    * slice (the `_merge` guards pick the rows each reader wants). */
+  private def mergedWithMatch: DataFrame = mergedCached.select(
+    mergedCached.columns.map(col).toIndexedSeq ++ matchColumns(mergedCached): _*)
 
   private def statLong(name: String): Long = {
     val i = statsRow.fieldIndex(name)
@@ -526,24 +539,18 @@ class SparkCompare(
     val statList = columnStats.filterNot(_.allMatch).map(s =>
       MismatchStat(s.column, s.dtype1, s.dtype2, s.unequalCnt, s.maxDiff,
         s.nullDiff, s.relTol, s.absTol))
-    val sampleList = columnStats
-      .filter(s => !s.allMatch && s.unequalCnt > 0)
-      .map(s => TextTable.dfToStr(sampleMismatch(s.column, sampleCount, forDisplay = true)))
+    val samples = sampleTables(
+      columnStats.filter(s => !s.allMatch && s.unequalCnt > 0).map(_.column),
+      sampleCount, columnCount)
     val mismatchStats =
       if (statList.nonEmpty)
         MismatchStats(hasMismatches = true,
-          hasSamples = sampleList.nonEmpty && sampleCount > 0,
-          stats = statList.sortBy(_.column), samples = sampleList,
+          hasSamples = samples.mismatches.nonEmpty && sampleCount > 0,
+          stats = statList.sortBy(_.column), samples = samples.mismatches,
           df1Name = n1, df2Name = n2)
       else MismatchStats(hasMismatches = false, hasSamples = false)
-    def uniqueRowsData(df: DataFrame, unqCount: Long): UniqueRowsData = {
-      val minSample = math.min(sampleCount.toLong, unqCount).toInt
-      val minCols = math.min(columnCount, df.columns.length)
-      if (minSample > 0)
-        UniqueRowsData(hasRows = true,
-          rows = TextTable.dfToStr(df.select(df.columns.take(minCols).map(col).toIndexedSeq: _*), minSample))
-      else UniqueRowsData(hasRows = false)
-    }
+    def uniqueRowsData(rows: Option[String]): UniqueRowsData =
+      rows.fold(UniqueRowsData(hasRows = false))(r => UniqueRowsData(hasRows = true, rows = r))
     ReportData(
       df1Name = n1, df2Name = n2,
       df1Shape = (df1Count, df1.columns.length),
@@ -551,8 +558,103 @@ class SparkCompare(
       columnCount = columnCount,
       columnSummary = columnSummary, rowSummary = rowSummary,
       columnComparison = columnComparison, mismatchStats = mismatchStats,
-      df1UniqueRows = uniqueRowsData(df1UnqRows, df1UnqCount),
-      df2UniqueRows = uniqueRowsData(df2UnqRows, df2UnqCount))
+      df1UniqueRows = uniqueRowsData(samples.df1Unique),
+      df2UniqueRows = uniqueRowsData(samples.df2Unique))
+  }
+
+  /** Every sample table the report shows, rendered from ONE query over the
+    * cached join (the reference runs one `limit` job per mismatching column
+    * and per unique-row slice, spark.py:720-777). Each row the tables need
+    * gets one tag per table family it feeds (`explode` over an array of
+    * `when(<col>_match === false, i)` tags plus `left_only`/`right_only`),
+    * is numbered in the cached relation's own (partition, position) order
+    * by `monotonically_increasing_id`, and a `row_number` per tag keeps the
+    * first `sampleCount`. That is the order `limit(n)` takes rows in, so
+    * each table holds the rows [[sampleMismatch]] and a limited
+    * [[df1UnqRows]]/[[df2UnqRows]] would show, in the same order. Spark
+    * plans a partial `WindowGroupLimit` below the exchange, so the shuffle
+    * carries at most (#tags × sampleCount) rows per map task: two jobs
+    * (AQE map stage plus result) however many columns mismatch, none when
+    * nothing needs sampling. Masked cells never leave the executors; they
+    * render as the mask literal, typed as the masked frames type them. */
+  private def sampleTables(columns: Seq[String], sampleCount: Int, columnCount: Int): SparkCompare.Samples = {
+    import graft.report.TextTable
+    require(sampleCount >= 0, s"sampleCount must be non-negative, got $sampleCount")
+    val schema = mergedCached.schema
+    // One collected column per distinct (merged column, display type),
+    // placed after the tag and the id in each collected row.
+    val slots = scala.collection.mutable.ArrayBuffer.empty[Column]
+    val slotOf = scala.collection.mutable.HashMap.empty[(String, DataType), Int]
+    type Cell = (StructField, Row => Any)
+    def cell(header: String, name: String, masked: Boolean, as: Option[DataType] = None): Cell =
+      if (masked) (StructField(header, StringType), _ => MaskValue)
+      else {
+        val dt = as.getOrElse(schema(name).dataType)
+        val i = slotOf.getOrElseUpdate((name, dt), { slots += col(name).cast(dt); slots.size + 1 })
+        (StructField(header, dt), r => r.get(i))
+      }
+    def values(cells: Seq[Cell], rows: Seq[Row]): Seq[Seq[Any]] = rows.map(r => cells.map(_._2(r)))
+    def render(cells: Seq[Cell], rows: Seq[Seq[Any]]): String =
+      TextTable.rowsToStr(StructType(cells.map(_._1)), rows.map(Row.fromSeq))
+
+    val leftTag = columns.length
+    val rightTag = leftTag + 1
+    val wantLeft = sampleCount > 0 && df1UnqCount > 0
+    val wantRight = sampleCount > 0 && df2UnqCount > 0
+    var collected = Map.empty[Int, Seq[Row]]
+    def rowsOf(tag: Int): Seq[Row] = collected.getOrElse(tag, Nil)
+
+    // Cells are declared before the query runs, so it collects exactly them.
+    val mismatches: Seq[() => String] =
+      if (onlyJoinColumns) columns.map { c =>
+        // [[sampleMismatch]]'s union of the two unique slices: df1's rows
+        // first, then df2's, at the union's widened type.
+        val (l, r) = (s"${c}_$n1", s"${c}_$n2")
+        val widened =
+          if (schema(l).dataType == schema(r).dataType) None
+          else Some(df1UnqRows.select(c).union(df2UnqRows.select(c)).schema.head.dataType)
+        val (lc, rc) = (cell(c, l, maskedColumns(c), widened), cell(c, r, maskedColumns(c), widened))
+        () => render(Seq(lc),
+          (values(Seq(lc), rowsOf(leftTag)) ++ values(Seq(rc), rowsOf(rightTag))).take(sampleCount))
+      }
+      else {
+        val masked = suffixedMaskNames
+        def merged(header: String, name: String) = cell(header, name, masked(name))
+        columns.zipWithIndex.map { case (c, tag) =>
+          val cells = joinColumns.map(k => merged(k, s"${k}_$n1")) ++
+            Seq(merged(s"$c ($n1)", s"${c}_$n1"), merged(s"$c ($n2)", s"${c}_$n2"))
+          () => render(cells, values(cells, rowsOf(tag)))
+        }
+      }
+    def unique(want: Boolean, cols: Seq[String], suffix: String, tag: Int): Option[() => String] =
+      Option.when(want) {
+        val cells = cols.take(columnCount).map(c => cell(c, s"${c}_$suffix", maskedColumns(c)))
+        () => render(cells, values(cells, rowsOf(tag)))
+      }
+    val df1Unique = unique(wantLeft, df1.columns.toSeq, n1, leftTag)
+    val df2Unique = unique(wantRight, df2.columns.toSeq, n2, rightTag)
+
+    val merge = col("_merge")
+    val tags =
+      (if (onlyJoinColumns || sampleCount == 0) Nil
+       else columns.zipWithIndex.map { case (c, i) => when(merge === "both" && col(s"${c}_match") === false, i) }) ++
+        (if (wantLeft) Seq(when(merge === "left_only", leftTag)) else Nil) ++
+        (if (wantRight) Seq(when(merge === "right_only", rightTag)) else Nil)
+    if (tags.nonEmpty) {
+      val slotNames = slots.indices.map(i => s"__graft_s$i")
+      collected = mergedWithMatch
+        .select(explode(array_compact(array(tags: _*))).as("__graft_tag") +:
+          slots.zip(slotNames).map { case (c, n) => c.as(n) }.toSeq: _*)
+        .select(col("__graft_tag") +: monotonically_increasing_id().as("__graft_id") +:
+          slotNames.map(col): _*)
+        .withColumn("__graft_rn",
+          row_number().over(Window.partitionBy("__graft_tag").orderBy("__graft_id")))
+        .where(col("__graft_rn") <= sampleCount)
+        .collect().toSeq
+        .groupBy(_.getInt(0))
+        .map { case (tag, rows) => tag -> rows.sortBy(_.getLong(1)) }
+    }
+    SparkCompare.Samples(mismatches.map(_()), df1Unique.map(_()), df2Unique.map(_()))
   }
 
   /** Render the text report; optionally save the HTML form and/or render
@@ -573,6 +675,11 @@ class SparkCompare(
 }
 
 object SparkCompare {
+  /** The report's rendered sample tables: one per mismatching column, then
+    * each unique-row slice's (None when it shows no rows). */
+  private final case class Samples(
+      mismatches: Seq[String], df1Unique: Option[String], df2Unique: Option[String])
+
   private final case class Shape(rowCount: Long, keyGroups: Long, nullKeyRows: Long) {
     def hasDupes: Boolean = rowCount > keyGroups
   }

@@ -43,8 +43,12 @@ object TextTable {
     * (reference: base.py:693-734 — Spark path collects via toPandas). */
   def dfToStr(df: DataFrame, sampleCount: Int = -1): String = {
     val limited = if (sampleCount >= 0) df.limit(sampleCount) else df
-    val schema = limited.schema
-    val rows = limited.collect()
+    rowsToStr(limited.schema, limited.collect().toSeq)
+  }
+
+  /** [[dfToStr]]'s layout over rows already on the driver: `schema` names
+    * the columns and decides how a NULL cell prints. */
+  def rowsToStr(schema: StructType, rows: Seq[Row]): String = {
     val headers = schema.fields.map(_.name).toSeq
     def fmt(v: Any, dt: DataType): String = v match {
       case null => dt match {
@@ -63,7 +67,7 @@ object TextTable {
     }
     val body = rows.map { r =>
       schema.fields.zipWithIndex.map { case (f, i) => fmt(r.get(i), f.dataType) }.toSeq
-    }.toSeq
+    }
     val idx = rows.indices.map(_.toString)
     val idxW = if (idx.isEmpty) 0 else idx.map(_.length).max
     val widths = headers.indices.map { i =>

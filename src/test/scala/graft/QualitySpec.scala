@@ -55,6 +55,59 @@ class QualitySpec extends SparkTestBase {
       "in_range(v)" -> 0L, "unique(id)" -> 0L))
   }
 
+  test("quality suite: a failing check cancels the others and leaves nothing running") {
+    import Quality._
+    import java.util.concurrent.{ConcurrentHashMap, CountDownLatch, TimeUnit}
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
+    import scala.jdk.CollectionConverters._
+    val sc = spark.sparkContext
+    val key = "graft.test.quality"
+    val started = ConcurrentHashMap.newKeySet[Int]()
+    val ended = ConcurrentHashMap.newKeySet[Int]()
+    val flushed = new CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty(key)).foreach {
+          case "validate" => started.add(e.jobId)
+          case "flush" => flushed.countDown()
+          case _ =>
+        }
+      override def onJobEnd(e: SparkListenerJobEnd): Unit = ended.add(e.jobId)
+    }
+    // each row of `v` takes 40 ms: a check over it runs for seconds
+    val slow = udf { (x: Long) => Thread.sleep(40); x % 7 }
+    // fails once the slow checks have started their jobs
+    val boom = udf { (x: Long) =>
+      Thread.sleep(500)
+      if (x >= 0) throw new IllegalStateException("boom")
+      x
+    }
+    val df = spark.range(0, 200, 1, 4).withColumn("v", slow(col("id")))
+    def poolThreads = Thread.getAllStackTraces.keySet.asScala
+      .filter(t => t.isAlive && t.getName.startsWith(PoolThreadPrefix))
+    assert(poolThreads.isEmpty)
+    sc.addSparkListener(listener)
+    try {
+      sc.setLocalProperty(key, "validate")
+      try intercept[Exception] {
+        // the failing row check runs beside two slow group checks; the
+        // k-anonymity check is still queued when it fails
+        validate(df, Seq(RowCheck("boom", boom(col("id")) > 0), unique("v"),
+          unique("id", "v"), kAnonymity(2, "v")))
+      } finally sc.setLocalProperty(key, null)
+      // a job started after the call proves every earlier event arrived
+      sc.setLocalProperty(key, "flush")
+      try sc.parallelize(Seq(1), 1).countAsync() finally sc.setLocalProperty(key, null)
+      assert(flushed.await(60, TimeUnit.SECONDS))
+      assert(!started.isEmpty)
+      assert(started.asScala.filterNot(ended.contains).isEmpty, "jobs still running")
+      // pool threads end with the pool, a moment after its last task
+      val deadline = System.nanoTime() + TimeUnit.SECONDS.toNanos(1)
+      while (poolThreads.nonEmpty && System.nanoTime() < deadline) Thread.sleep(10)
+      assert(poolThreads.isEmpty, "pool threads still alive")
+    } finally sc.removeSparkListener(listener)
+  }
+
   test("quality suite: k-anonymity counts rows in under-k groups") {
     import Quality._
     val df = Seq(

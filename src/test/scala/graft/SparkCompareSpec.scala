@@ -284,4 +284,41 @@ class SparkCompareSpec extends SparkTestBase {
       CompareConfig(joinColumns = Seq("id"), cacheIntermediates = false))
     assert(c.matches())
   }
+
+  test("string max diff: numeric, non-numeric, special and NULL strings") {
+    val a = Seq(
+      (1, "1.5", "abc", "1e3", "2.5", "Infinity"),
+      (2, "abc", "x", "NaN", "4", "1"),
+      (3, " 1", "5", "Infinity", "1", "2"),
+      (4, "NaN", null, "-0", "3", null),
+      (5, "Infinity", "q", null, "7", "5"),
+      (6, "-0", "w", "8", "0.5", "abc"),
+      (7, null, "7", "9", "1", "3"),
+      (8, "4", "s", "x", "2", "4"))
+      .toDF("id", "num", "text", "same", "mixed", "inf")
+    val b = Seq(
+      (1, "2.5", "abd", "1000", 1.0, "1"),
+      (2, "abd", "y", "NaN", 4.0, "1"),
+      (3, "1", "5", "Infinity", 1.0, "3"),
+      (4, "NaN", "z", "0", 3.0, "4"),
+      (5, "Infinity", "r", "1", 7.0, "5"),
+      (6, "0", "e", "8", 0.25, "def"),
+      (7, "3", null, null, 1.0, null),
+      (8, null, "t", "x", 2.0, "4"))
+      .toDF("id", "num", "text", "same", "mixed", "inf")
+    val c = cmp(a.repartition(3), b.repartition(2), Seq("id"))
+    val maxDiff = c.columnStats.map(s => s.column -> s.maxDiff).toMap
+    // "1.5"/"2.5" is the only numeric unequal pair that differs in value
+    assert(maxDiff("num") == 1.0)
+    // every unequal pair is non-numeric; "5"/"5" is equal
+    assert(maxDiff("text") == 0.0)
+    // unequal strings of equal value ("1e3"/"1000", "-0"/"0"), equal NaN,
+    // Infinity and numeric strings
+    assert(maxDiff("same") == 0.0)
+    // string against double keeps the plain double view
+    assert(maxDiff("mixed") == 1.5)
+    // "Infinity"/"1" is an infinite diff
+    assert(maxDiff("inf") == Double.PositiveInfinity)
+    assert(c.columnStats.find(_.column == "text").get.nullDiff == 2L)
+  }
 }
