@@ -111,7 +111,7 @@ object ComparePack {
       (s, dir, absTol, relTol, keys, raw), {
         if (absTol != 0.0 || relTol != 0.0)
           // tolerance only changes match expressions — derive from the base
-          // compare so the join, shape probes, and cached intersection are
+          // compare so the join and cached intersection are
           // shared instead of recomputed per tolerance configuration
           compare(s, dir, 0.0, keys, raw)
             .withTolerances(ToleranceSpec.of(absTol), ToleranceSpec.of(relTol))
@@ -120,10 +120,9 @@ object ComparePack {
             if (raw) (frameARaw(s, dir), frameBRaw(s, dir))
             else (frameA(s, dir), frameB(s, dir))
           // the non-raw frames are unique-keyed by construction (uniqueKeyed
-          // filter); the raw frames carry known duplicates. Keys are
-          // null-free either way (the orderkey mod-filter itself drops
-          // NULLs), so both paths skip the probe scans — the raw hint keeps
-          // the pairing-rank windows.
+          // filter) and null-free (the orderkey mod-filter itself drops
+          // NULLs), so they take the hinted sort-merge join; the raw frames
+          // carry known duplicates, so their compare pairs them by rank.
           val hints =
             if (raw) (Some(false), Some(true)) else (Some(true), Some(true))
           new SparkCompare(s, a, b,

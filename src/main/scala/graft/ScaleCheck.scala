@@ -122,7 +122,7 @@ object ScaleCheck {
             .otherwise(col("l_quantity")))
       // duplicate (orderkey, linenumber) keys exist in the synthetic data,
       // so this exercises the dupe-rank pairing machinery too — the full
-      // flagship path: probe, null-safe join, fused stats pass
+      // flagship path: one-shuffle rank-paired join, fused stats pass
       new SparkCompare(li.sparkSession, a, b,
         CompareConfig(joinColumns = Seq("l_orderkey", "l_linenumber")))
         .columnStats.length.toLong

@@ -54,11 +54,11 @@ object Main {
       |                             only 'spark' is accepted)
       |  --no-cache-intermediates   skip caching the merged join
       |  --assume-keys-unique       promise join keys are unique per side:
-      |                             skips the duplicate-shape probe scan and
-      |                             the pairing-rank windows. UNCHECKED — a
+      |                             plans a plain sort-merge join with no
+      |                             pairing-rank windows. UNCHECKED — a
       |                             wrong promise produces wrong results.
       |  --assume-keys-null-free    promise join keys contain no NULLs:
-      |                             skips the null probe and plans plain
+      |                             with --assume-keys-unique, plans plain
       |                             equality joins. UNCHECKED.
       |  --help                     show this help and exit
       |  --version                  show version and exit

@@ -34,7 +34,14 @@ object CompareFunctions {
     (view(col1), view(col2)) match {
       case (Some(a), Some(b)) =>
         val d = abs(a - b)
-        val r = df.agg(max(when(!isnan(d), d))).first()
+        // Byte-equal strings give a diff of 0, NaN or NULL, none of which
+        // raises the max, so only unequal string pairs pay for the double
+        // cast (the stats pass of `SparkCompare` reads them the same way).
+        val differ =
+          if (df.schema(col1).dataType == StringType && df.schema(col2).dataType == StringType)
+            col(col1) =!= col(col2)
+          else lit(true)
+        val r = df.agg(max(when(differ && !isnan(d), d))).first()
         if (r.isNullAt(0)) 0.0 else { val v = r.getDouble(0); if (v.isNaN) 0.0 else v }
       case _ => 0.0
     }

@@ -65,14 +65,19 @@ final case class CompareConfig(
     customComparators: Seq[Comparator] = Nil,
     cacheIntermediates: Boolean = true,
     /** UNCHECKED caller contract: Some(true) promises the join keys are
-      * unique per frame, letting the engine skip the duplicate-shape probe
-      * scan and the pairing-rank window entirely. Wrong promises produce
-      * many-to-many joins (wrong results) — use only when uniqueness is
-      * guaranteed upstream (primary keys, post-dedup data). None = probe. */
+      * unique per frame, letting the engine plan a plain sort-merge join on
+      * the keys with no pairing-rank window (the exchange-free bucketed
+      * compare needs it). Wrong promises produce many-to-many joins (wrong
+      * results) — use only when uniqueness is guaranteed upstream (primary
+      * keys, post-dedup data). None or Some(false) = the one-shuffle
+      * rank-paired join, which is correct either way; the hint only sets
+      * the report's duplicates flag without reading it from the data. */
     assumeKeysUnique: Option[Boolean] = None,
     /** UNCHECKED caller contract: Some(true) promises no NULLs in any join
-      * key column, letting the engine plan plain `===` joins (better
-      * exchange reuse) without the null probe. None = probe. */
+      * key column, letting the `assumeKeysUnique = Some(true)` join use
+      * plain `===` keys, which a bucketed scan's partitioning satisfies
+      * (`<=>` re-keys on null-safe tuples). No effect otherwise: the
+      * rank-paired join groups NULL keys natively. */
     assumeKeysNullFree: Option[Boolean] = None) {
   require(joinColumns.nonEmpty, "join_columns must be non-empty")
   require(joinColumns.forall(_.nonEmpty), "join_columns entries must be non-empty")

@@ -56,8 +56,8 @@ object Graph {
   /** @param edgesDistinct the caller guarantees `edges` carries no
     *   duplicate (src, dst) rows — skips the dedup shuffle.
     * @param assumeSmallGraph caller-supplied answer to "does the node set
-    *   fit a broadcast?" — skips the sizing count job(s) entirely (the same
-    *   hint-skippable-probe contract as SparkCompare's assumeKeysUnique):
+    *   fit a broadcast?" — skips the sizing count job(s) entirely (an
+    *   unchecked caller promise, like SparkCompare's assumeKeysUnique):
     *   a fixed per-action cost that matters when the supersteps themselves
     *   are sub-second. None = measure.
     * @param symmetrize treat `edges` as undirected: the reverse direction
@@ -313,7 +313,7 @@ object Graph {
     *   and BFS reach is duplicate-insensitive (each level distincts its
     *   frontier).
     * @param assumeSmallFrontier Some(true)/Some(false) skips the per-level
-    *   sizing counts entirely (the hint-skippable-probe contract);
+    *   sizing counts entirely (an unchecked caller promise);
     *   None = measure each level. NOTE: with None, the per-level count()
     *   actions (and the level caches they fill) run at DataFrame
     *   CONSTRUCTION time — building the plan pays the full traversal.

@@ -14,13 +14,18 @@ import graft.functions.{CompareOpts, ComparatorPipeline, TypeClasses}
   * Semantics follow the reference (datacompy/spark.py:86-990) exactly;
   * the *plans* are redesigned Spark-first for scale:
   *
-  *   - ONE native full outer join on `<=>` key conjunction
-  *     (reference builds it via temp views + SQL strings, spark.py:450-466).
-  *   - Duplicate-key pairing rank computed with a single window over each
-  *     input (reference does monotonic-id + self-join, spark.py:388-412, and
-  *     two extra null/sentinel probe jobs per input, spark.py:1136-1147 —
-  *     Spark's window partitioning already groups NULL keys together, so the
-  *     string-cast/sentinel dance is unnecessary).
+  *   - ONE shuffle builds the merged full outer join: both inputs are
+  *     unioned and hashed once by the join keys, and windows over that one
+  *     partitioning rank duplicate keys and pair the k-th row of a key group
+  *     on one side with the k-th on the other (reference: temp views + a SQL
+  *     join on `<=>` keys, spark.py:450-466, after a monotonic-id +
+  *     self-join rank per input, spark.py:388-412, and two null/sentinel
+  *     probe jobs per input, spark.py:1136-1147 — a window partition already
+  *     groups NULL keys the way `<=>` matches them). No probe of the data
+  *     runs first: the plan does not depend on it. See [[pairedByRank]].
+  *   - `assumeKeysUnique = Some(true)` plans a plain sort-merge join on the
+  *     keys instead, with no window (the exchange-free bucketed compare,
+  *     `graft.sources.Bucketing`, relies on it).
   *   - ALL statistics — per-column match counts, null diffs, max diffs, the
   *     all-columns-match row count, AND the merge-slice counts — are fused
   *     into one single-pass aggregation over the cached join (reference runs
@@ -28,10 +33,9 @@ import graft.functions.{CompareOpts, ComparatorPipeline, TypeClasses}
   *     per column for max_diff/null_diff, spark.py:1026-1111, another
   *     full-scan filter for count_matching_rows, spark.py:659-679, and
   *     per-slice counts, spark.py:524-531 — O(columns) scans).
-  *   - Because the join sides are unique on (keys ++ rank), the outer join is
-  *     1:1 and `left_only = count(df1) - count(intersect)` — unique-row counts
-  *     cost no extra scan at all (reference counts each slice,
-  *     spark.py:524-531).
+  *   - Because the pairing is 1:1, `count(df1) = both + left_only` — input
+  *     row counts cost no extra scan at all (reference counts each input and
+  *     each slice, spark.py:524-531).
   *   - Every count is memoized; nothing is ever recounted.
   *   - Every sample the report shows (up to `sampleCount` mismatching rows
   *     per mismatching column, and the first rows of each unique-row slice)
@@ -39,9 +43,9 @@ import graft.functions.{CompareOpts, ComparatorPipeline, TypeClasses}
   *     columns mismatch (reference: one `limit` job per column and per
   *     slice, spark.py:720-777). See [[sampleTables]].
   *
-  * At 100 TB the dominant costs are the two input scans (key-group shape
-  * check), the join shuffle, and the one stats pass over the cached
-  * intersection — all O(data), none O(columns × data).
+  * At 100 TB the dominant costs are the input scans, the one shuffle of
+  * both inputs, and the one stats pass over the cached join — all O(data),
+  * none O(columns × data).
   */
 class SparkCompare(
     val spark: SparkSession,
@@ -94,111 +98,139 @@ class SparkCompare(
     df1UnqColumns.isEmpty && df2UnqColumns.isEmpty && intersectColumns.toSet == joinSet
   private val compareColumns: Seq[String] = intersectColumns.filterNot(joinSet)
 
-  import SparkCompare.Shape
+  /** True when the merged join pairs rows by a per-key-group rank (every
+    * compare except one whose keys are promised unique). */
+  private def pairsByRank: Boolean = !config.assumeKeysUnique.contains(true)
 
-  // ---- shape probe: row count, key-group count, and null-key presence for
-  // BOTH inputs in ONE job (each input projects to just its join columns +
-  // a side tag before the union, so the probe shuffle carries keys only) ----
-  private lazy val shapes: (Shape, Shape) = parent.map(_.shapes).getOrElse {
-    val anyKeyNull = joinColumns.map(col(_).isNull).reduce(_ || _)
-    def side(df: DataFrame, tag: Int) =
-      df.select(lit(tag).as("__graft_side") +: joinColumns.map(col): _*)
-    val rows = side(df1, 0).unionByName(side(df2, 1))
-      .groupBy(col("__graft_side") +: joinColumns.map(col): _*)
-      .agg(count(lit(1)).as("__graft_n"),
-        // the keys ARE the group, so the null flag is constant per group
-        max(when(anyKeyNull, 1).otherwise(0)).as("__graft_null"))
-      .groupBy("__graft_side")
-      .agg(
-        count(lit(1)),
-        coalesce(sum("__graft_n"), lit(0L)),
-        coalesce(sum(when(col("__graft_null") === 1, col("__graft_n")).otherwise(0L)), lit(0L)))
-      .collect()
-      .map(r => r.getInt(0) -> Shape(r.getLong(2), r.getLong(1), r.getLong(3)))
-      .toMap
-    (rows.getOrElse(0, Shape(0, 0, 0)), rows.getOrElse(1, Shape(0, 0, 0)))
-  }
-  private lazy val df1Shape: Shape = shapes._1
-  private lazy val df2Shape: Shape = shapes._2
-  /** True when the caller's assume-hints answer every planning question
-    * (duplicate presence AND key nullability), making the probe scan
-    * unnecessary; row counts then come from slice arithmetic over the
-    * cached join — `assumeKeysUnique = Some(false)` is as probe-free as
-    * `Some(true)`, it just keeps the pairing-rank windows (harmless when
-    * data turns out unique: every rank is 0). */
-  private def probeFree: Boolean =
-    config.assumeKeysUnique.isDefined && config.assumeKeysNullFree.isDefined
-  lazy val df1Count: Long =
-    if (probeFree) sliceCounts._1 + sliceCounts._2 else df1Shape.rowCount
-  lazy val df2Count: Long =
-    if (probeFree) sliceCounts._1 + sliceCounts._3 else df2Shape.rowCount
+  /** The outer join is 1:1 (see [[merged]]), so the input row counts are
+    * slice arithmetic over the one stats pass: no input re-scan. */
+  lazy val df1Count: Long = sliceCounts._1 + sliceCounts._2
+  lazy val df2Count: Long = sliceCounts._1 + sliceCounts._3
+  /** The `assumeKeysUnique` hint when given; otherwise whether any key
+    * group holds more than one row on either side (a pairing rank above 0),
+    * read from the stats pass. */
   lazy val anyDupes: Boolean =
-    config.assumeKeysUnique.map(!_)
-      .getOrElse(df1Shape.hasDupes || df2Shape.hasDupes)
+    config.assumeKeysUnique.map(!_).getOrElse(statLong("__graft_max_rank") > 0)
 
-  private val ordCol: String = Utils.tempColumnName(df1, df2)
-
-  /** Rank within duplicate key groups so the k-th duplicate on one side pairs
-    * with the k-th on the other (reference: spark.py:388-413, 1114-1170).
-    * NULL keys form their own window partition, matching the reference's
-    * fillna-sentinel behaviour. Ordering by `monotonically_increasing_id`
-    * preserves the physical row order per partition, like the reference;
-    * pairing across frames is deterministic only for deterministic layouts
-    * (documented reference behaviour). */
-  private def withPairingRank(df: DataFrame): DataFrame = {
-    val w = Window.partitionBy(joinColumns.map(col): _*).orderBy(monotonically_increasing_id())
-    df.withColumn(ordCol, row_number().over(w) - 1)
-  }
+  /** Internal rank column of the merged join; no public frame shows it. */
+  private val rankCol: String = Utils.tempColumnName(df1, df2)
 
   private val leftFlag = "_merge_left"
   private val rightFlag = "_merge_right"
 
-  private lazy val merged: DataFrame = parent.map(_.merged).getOrElse {
-    var d1 = df1
-    var d2 = df2
-    var tempJoin = joinColumns
-    if (anyDupes) {
-      d1 = withPairingRank(d1)
-      d2 = withPairingRank(d2)
-      tempJoin = joinColumns :+ ordCol
-    }
-    if (config.ignoreSpaces) {
-      for (c <- joinColumns) {
-        if (TypeClasses.isStringLike(d1.schema(c).dataType)) d1 = d1.withColumn(c, trim(col(c)))
-        if (TypeClasses.isStringLike(d2.schema(c).dataType)) d2 = d2.withColumn(c, trim(col(c)))
-      }
-    }
-    // Suffix every column, add the merge-indicator flags (spark.py:429-448).
-    val s1 = d1.select(d1.columns.map(c => col(c).as(s"${c}_$n1")).toIndexedSeq :+
-      lit(true).as(leftFlag): _*)
-    val s2 = d2.select(d2.columns.map(c => col(c).as(s"${c}_$n2")).toIndexedSeq :+
-      lit(true).as(rightFlag): _*)
-    // Null-safe equality on each key — but when the key data contains no
-    // NULLs (known from the shape probe, no extra job) or the schema proves
-    // non-nullability, plain `===` is semantically identical and plans
-    // better: `<=>` makes the join partition on (coalesce(k), isnull(k))
-    // tuples, which defeats exchange reuse with the pairing-rank window
-    // (partitioned on the raw keys) and costs a second full shuffle of both
-    // inputs. Parquet schemas mark everything nullable, so the data-driven
-    // signal is the one that usually fires.
-    val noNullKeys = config.assumeKeysNullFree
-      .getOrElse(df1Shape.nullKeyRows == 0 && df2Shape.nullKeyRows == 0)
-    val cond = tempJoin.map { k =>
-      val nonNullable = k == ordCol ||
-        (!d1.schema(k).nullable && !d2.schema(k).nullable)
-      if (nonNullable || noNullKeys) col(s"${k}_$n1") === col(s"${k}_$n2")
-      else col(s"${k}_$n1") <=> col(s"${k}_$n2")
+  /** A join key as the join compares it: string keys trimmed under
+    * `ignoreSpaces`. */
+  private def keyValue(df: DataFrame, k: String): Column =
+    if (config.ignoreSpaces && TypeClasses.isStringLike(df.schema(k).dataType)) trim(col(k))
+    else col(k)
+
+  /** The merged full outer join: one row per df1 row and per unpaired df2
+    * row, `{col}_{df1Name}` then `_merge_left`, `{col}_{df2Name}` then
+    * `_merge_right`, then `_merge` (reference: spark.py:429-484). */
+  private lazy val merged: DataFrame = parent.map(_.merged).getOrElse(
+    if (pairsByRank) pairedByRank else uniqueKeyJoin)
+
+  /** Under `assumeKeysUnique = Some(true)`: a plain sort-merge join on the
+    * keys, no window. `===` when the keys are non-nullable or promised
+    * NULL-free: `<=>` partitions on (coalesce(k), isnull(k)) tuples, which a
+    * bucketed scan's partitioning does not satisfy (see `Bucketing`). */
+  private def uniqueKeyJoin: DataFrame = {
+    def suffixed(df: DataFrame, n: String, flag: String) = df.select(
+      df.columns.toIndexedSeq.map(c => (if (joinSet(c)) keyValue(df, c) else col(c)).as(s"${c}_$n")) :+
+        lit(true).as(flag): _*)
+    val nullFree = config.assumeKeysNullFree.contains(true)
+    val cond = joinColumns.map { k =>
+      val (k1, k2) = (col(s"${k}_$n1"), col(s"${k}_$n2"))
+      if (nullFree || (!df1.schema(k).nullable && !df2.schema(k).nullable)) k1 === k2
+      else k1 <=> k2
     }.reduce(_ && _)
-    val joined = s1.join(s2, cond, "full_outer")
-    // Merge indicator from the lit(true) flags (spark.py:468-484).
-    val withMerge = joined.withColumn(
-      "_merge",
-      when(col(leftFlag) === true && col(rightFlag).isNull, "left_only")
-        .when(col(leftFlag).isNull && col(rightFlag) === true, "right_only")
-        .otherwise("both"))
-    val dropOrd =
-      if (anyDupes) Seq(s"${ordCol}_$n1", s"${ordCol}_$n2") else Nil
-    withMerge.drop(dropOrd: _*)
+    suffixed(df1, n1, leftFlag).join(suffixed(df2, n2, rightFlag), cond, "full_outer")
+      .withColumn("_merge",
+        when(col(leftFlag) === true && col(rightFlag).isNull, "left_only")
+          .when(col(leftFlag).isNull && col(rightFlag) === true, "right_only")
+          .otherwise("both"))
+  }
+
+  /** Rank-paired outer join from ONE shuffle (reference: spark.py:388-484,
+    * 1114-1170, which ranks each input with an id + self-join and joins on
+    * keys ++ rank). Both inputs are unioned and hashed once by the join
+    * keys; every window below partitions by those keys only, so Spark plans
+    * one Exchange, over the union, and no join.
+    *
+    *   - A union row holds the keys at top level, a side tag, the input's
+    *     `monotonically_increasing_id` (its scan order), df1's non-key
+    *     columns flat (NULL on df2 rows) and df2's in one struct (NULL on
+    *     df1 rows). A window partition groups NULL keys the way `<=>`
+    *     matches them, and key types that differ widen as the union widens
+    *     them, which is the type `===` compares them at (strings against
+    *     other types outside ANSI mode cast as the comparison casts them).
+    *   - Rank: position in (side, id) order within the key group, df2's
+    *     counted after the group's df1 rows, so the k-th duplicate on one
+    *     side pairs with the k-th on the other.
+    *   - Pairing, in (rank, side) order: a df1 row takes the next row's
+    *     struct when that row is the df2 row of its rank, and that df2 row
+    *     is dropped. Each rank has at most one row a side, so the result is
+    *     1:1 by construction.
+    *   - The flags, `_merge` and each side's copy of a key are derived after
+    *     the pairing. A df2 key crosses the shuffle a second time (in the
+    *     struct) only where the value the window groups by may differ from
+    *     it: key types that differ, and key types whose equal values can
+    *     differ (floating point, collated strings).
+    *
+    * Within a reduce partition rows come out sorted by (keys, rank), as
+    * the sort-merge join on keys ++ rank gave them. */
+  private def pairedByRank: DataFrame = {
+    val side = "__graft_side"
+    val struct2 = "__graft_r"
+    // `slot`: the key's top-level union column. `differ`: its type differs
+    // between the inputs, so each input's own value rides along (df1's
+    // flat, df2's in the struct). `inStruct`: df2's value rides in the
+    // struct, also where equal values of its type can differ.
+    final case class Key(name: String, slot: String, differ: Boolean, cast: Option[DataType]) {
+      def inStruct: Boolean = differ || !SparkCompare.equalIsIdentical(df2.schema(name).dataType)
+    }
+    val keyed = joinColumns.zipWithIndex.map { case (k, i) =>
+      val (t1, t2) = (df1.schema(k).dataType, df2.schema(k).dataType)
+      Key(k, s"__graft_k$i", t1 != t2, SparkCompare.compareCast(spark, t1, t2))
+    }
+    def input(df: DataFrame, tag: Int, rest: Seq[Column]) = df.select(
+      keyed.map(k => k.cast.fold(keyValue(df, k.name))(keyValue(df, k.name).cast(_)).as(k.slot)) ++
+        Seq(lit(tag).as(side), monotonically_increasing_id().as("__graft_id")) ++ rest: _*)
+    val rest2 = df2.columns.toSeq.flatMap(c => keyed.find(_.name == c) match {
+      case Some(k) => Option.when(k.inStruct)(keyValue(df2, c).as(c))
+      case None => Some(col(c))
+    })
+    val left = input(df1, 0,
+      keyed.filter(_.differ).map(k => keyValue(df1, k.name).as(s"${k.name}_$n1")) ++
+        df1.columns.filterNot(joinSet).map(c => col(c).as(s"${c}_$n1")))
+    val right = input(df2, 1, Option.when(rest2.nonEmpty)(struct(rest2: _*).as(struct2)).toSeq)
+    val keys = keyed.map(k => col(k.slot))
+    val rank = col(rankCol)
+    val byArrival = Window.partitionBy(keys: _*).orderBy(side, "__graft_id")
+    // Group size less its df2 rows: aggregates of the tag itself, so no
+    // helper column is computed below the exchange.
+    val group = byArrival.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
+    val df1Rows = count(lit(1)).over(group) - sum(col(side)).over(group)
+    val byRank = Window.partitionBy(keys: _*).orderBy(rankCol, side)
+    val paired = left.unionByName(right, allowMissingColumns = true)
+      .withColumn(rankCol,
+        row_number().over(byArrival) - 1 - when(col(side) === 1, df1Rows).otherwise(0L))
+      .select(Seq(col("*"),
+        coalesce(lead(rank, 1).over(byRank) === rank, lit(false)).as("__graft_paired"),
+        lag(rank, 1).over(byRank).as("__graft_prev")) ++
+        Option.when(rest2.nonEmpty)(lead(col(struct2), 1).over(byRank).as("__graft_p")): _*)
+      .where(col(side) === 0 || !(col("__graft_prev") <=> rank))
+    val isLeft = col(side) === 0
+    val hasRight = !isLeft || col("__graft_paired")
+    val row2 = when(isLeft, col("__graft_p")).otherwise(col(struct2))
+    val out1 = df1.columns.toSeq.map(c => keyed.find(k => k.name == c && !k.differ)
+      .fold(col(s"${c}_$n1"))(k => when(isLeft, col(k.slot)).as(s"${c}_$n1")))
+    val out2 = df2.columns.toSeq.map(c => keyed.find(k => k.name == c && !k.inStruct)
+      .fold(row2.getField(c))(k => when(hasRight, col(k.slot))).as(s"${c}_$n2"))
+    paired.select(out1 ++ Seq(when(isLeft, true).as(leftFlag)) ++ out2 ++ Seq(
+      when(hasRight, true).as(rightFlag),
+      when(!isLeft, "right_only").when(col("__graft_paired"), "both").otherwise("left_only").as("_merge"),
+      rank): _*)
   }
 
   /** The merged outer join, persisted when cacheIntermediates: every derived
@@ -215,9 +247,8 @@ class SparkCompare(
 
   /** left_only / right_only / both counts, folded into the single stats
     * pass ([[statsRow]] aggregates the whole cached join with `_merge`
-    * guards). Because the join sides are unique on (keys ++ rank), the
-    * outer join is 1:1 and these slice counts reconstruct the input row
-    * counts with no input re-scan. */
+    * guards). The outer join is 1:1, so these slice counts reconstruct the
+    * input row counts with no input re-scan. */
   private lazy val sliceCounts: (Long, Long, Long) = parent.map(_.sliceCounts).getOrElse(
     (statLong("__graft_cnt"), statLong("__graft_left"), statLong("__graft_right")))
 
@@ -280,7 +311,7 @@ class SparkCompare(
     * materialization instead of re-running the join per tolerance
     * configuration. */
   private lazy val intersectBase: DataFrame =
-    mergedCached.filter(col("_merge") === "both")
+    mergedCached.filter(col("_merge") === "both").drop(rankCol)
 
   /** One boolean `{col}_match` expression per compared column, bound
     * against `df` — used by both the sampled-rows projection and the fused
@@ -304,8 +335,8 @@ class SparkCompare(
       intersectBase.columns.map(col).toIndexedSeq ++ matchColumns(intersectBase): _*)
 
   /** A comparison over the same frames and join with different tolerances.
-    * The derived instance shares the shape probes, the merged outer join,
-    * and the cached intersection — only the match expressions (and the
+    * The derived instance shares the merged outer join and the cached
+    * intersection — only the match expressions (and the
     * statistics computed from them) are rebuilt, so the marginal cost of an
     * extra tolerance configuration is one aggregation pass over cached
     * data, not a re-join. `unpersist()` on either instance releases the
@@ -394,7 +425,8 @@ class SparkCompare(
       sum(when(isBoth, 1L).otherwise(0L)).as("__graft_cnt"),
       sum(when(col("_merge") === "left_only", 1L).otherwise(0L)).as("__graft_left"),
       sum(when(col("_merge") === "right_only", 1L).otherwise(0L)).as("__graft_right"),
-      sum(when(isBoth && allMatchCond, 1L).otherwise(0L)).as("__graft_all_match")) ++ perCol
+      sum(when(isBoth && allMatchCond, 1L).otherwise(0L)).as("__graft_all_match")) ++
+      Option.when(pairsByRank)(max(col(rankCol)).as("__graft_max_rank")) ++ perCol
     mergedWithMatch.agg(exprs.head, exprs.tail: _*).first()
   }
 
@@ -419,10 +451,8 @@ class SparkCompare(
 
   lazy val intersectCount: Long = statLong("__graft_cnt")
   /** 1:1 join ⇒ unique counts are pure arithmetic (see class doc). */
-  lazy val df1UnqCount: Long =
-    if (probeFree) sliceCounts._2 else df1Count - intersectCount
-  lazy val df2UnqCount: Long =
-    if (probeFree) sliceCounts._3 else df2Count - intersectCount
+  lazy val df1UnqCount: Long = sliceCounts._2
+  lazy val df2UnqCount: Long = sliceCounts._3
 
   /** Per-column stats in intersect-column order (spark.py:582-636). */
   lazy val columnStats: Seq[ColumnStat] = {
@@ -680,8 +710,42 @@ object SparkCompare {
   private final case class Samples(
       mismatches: Seq[String], df1Unique: Option[String], df2Unique: Option[String])
 
-  private final case class Shape(rowCount: Long, keyGroups: Long, nullKeyRows: Long) {
-    def hasDupes: Boolean = rowCount > keyGroups
+  /** The type to cast a join key to before the union, where the union's
+    * own widening would not give the type `===` compares the two key types
+    * at: outside ANSI mode `===` casts a string to the other side's type
+    * (a decimal with a fraction to double) and a boolean to the other
+    * side's numeric type, where a union widens to string or fails. None
+    * for equal types and wherever the union widens as the comparison does
+    * (every pair in ANSI mode). `SparkCompareEquivalenceSpec` pins this
+    * against the analyzer's join condition, type pair by type pair. */
+  private[graft] def compareCast(spark: SparkSession, t1: DataType, t2: DataType): Option[DataType] = {
+    def castsTo(t: DataType): Boolean = t match {
+      case _: NumericType | BooleanType | BinaryType | DateType | TimestampType | TimestampNTZType => true
+      case _ => false
+    }
+    if (t1 == t2 || spark.conf.get("spark.sql.ansi.enabled").toBoolean) None
+    else (t1, t2) match {
+      case (_: StringType, t) if castsTo(t) => Some(stringCastTo(t))
+      case (t, _: StringType) if castsTo(t) => Some(stringCastTo(t))
+      case (BooleanType, n: NumericType) => Some(n)
+      case (n: NumericType, BooleanType) => Some(n)
+      case _ => None
+    }
+  }
+
+  private def stringCastTo(t: DataType): DataType = t match {
+    case d: DecimalType if d.scale > 0 => DoubleType
+    case _ => t
+  }
+
+  /** Whether two equal values of `dt` are always the same value, so the
+    * value a window groups by can stand for both sides' key. Not so for
+    * floating point (-0.0 = 0.0, NaN bit patterns) or collated strings. */
+  private def equalIsIdentical(dt: DataType): Boolean = dt match {
+    case ByteType | ShortType | IntegerType | LongType | BooleanType | BinaryType |
+        DateType | TimestampType | TimestampNTZType | _: DecimalType => true
+    case s: StringType => s == StringType
+    case _ => false
   }
 }
 

@@ -10,10 +10,12 @@ import org.apache.spark.sql.DataFrame
   * shuffle once at write time: a catalog scan of a bucketed table reports
   * `HashPartitioning(keys, buckets)`, so Catalyst plans the sort-merge join
   * with NO Exchange on either side (both tables must use the same bucket
-  * count). Combine with `assumeKeysNullFree` (plain `===` join keeps the
-  * bucket partitioning usable; `<=>` would re-key on null-safe tuples) and
-  * `assumeKeysUnique` (skips the probe scans) for a fully shuffle-free
-  * compare.
+  * count). It needs `assumeKeysUnique = Some(true)`, which plans that
+  * plain sort-merge join (an unhinted compare pairs rows with windows over
+  * a union of both inputs, which shuffles once whatever the layout), and
+  * `assumeKeysNullFree` (a plain `===` join keeps the bucket partitioning
+  * usable; `<=>` would re-key on null-safe tuples) for a fully
+  * shuffle-free compare.
   *
   * The reference has no bucketed path — its Snowflake/pandas backends have
   * no equivalent concept; this is Spark-native scale work. */

@@ -153,6 +153,20 @@ class ComparatorSpec extends SparkTestBase {
     assert(calculateMaxDiff(strs, "a", "b") == 0.0)
   }
 
+  test("calculateMaxDiff on string pairs: numeric, non-numeric, special and NULL strings") {
+    def maxDiff(pairs: (String, String)*): Double =
+      CompareFunctions.calculateMaxDiff(pairs.toDF("a", "b").repartition(2), "a", "b")
+    assert(maxDiff(("1.5", "2.5"), ("4", "4"), ("abc", "abd")) == 1.0)
+    assert(maxDiff(("abc", "abd"), ("x", "x"), ("5", "5")) == 0.0)
+    // unequal strings of equal value, equal NaN and Infinity
+    assert(maxDiff(("1e3", "1000"), ("-0", "0"), ("NaN", "NaN"), ("Infinity", "Infinity"),
+      (" 1", "1")) == 0.0)
+    assert(maxDiff(("NaN", "1"), ("2", "3.5")) == 1.5)
+    assert(maxDiff(("Infinity", "1"), ("1", "2")) == Double.PositiveInfinity)
+    assert(maxDiff((null, "3"), ("7", null), (null, null)) == 0.0)
+    assert(maxDiff((null, "3"), (" 1", "3")) == 2.0)
+  }
+
   test("custom comparator is consulted first and may decline") {
     object LengthComparator extends Comparator {
       def compare(df: DataFrame, c1: String, c2: String, opts: CompareOpts): Option[Column] =
