@@ -1,14 +1,21 @@
 #!/bin/bash
-# Interleaved A/B bench runs: new (/root/repo) vs old (/root/repo_old).
-# Usage: ab_run.sh <queries-csv> <passes> <tag> <side-sequence e.g. "new old new old">
-# Writes the bench's compact JSON line to target/r17_ab_<tag>_<side><i>.json
+# Interleaved A/B bench runs of two checkouts of this repository: "new" (the
+# change) and "old" (its parent).
+# Usage: ab_run.sh <new-checkout> <old-checkout> <queries-csv> <passes> <tag> <side-sequence e.g. "new old new old">
+# Writes the bench's compact JSON line to <new-checkout>/target/ab_<tag>_<side><i>.json
 set -u
-Q="$1"; PASSES="$2"; TAG="$3"; shift 3
+if [ $# -lt 6 ]; then
+  echo "usage: $0 <new-checkout> <old-checkout> <queries-csv> <passes> <tag> <side>..." >&2
+  exit 2
+fi
+NEW="$(cd "$1" && pwd)"; OLD="$(cd "$2" && pwd)"
+Q="$3"; PASSES="$4"; TAG="$5"; shift 5
+mkdir -p "$NEW/target"
 declare -A count
 for side in "$@"; do
   count[$side]=$(( ${count[$side]:-0} + 1 ))
-  dir=/root/repo; [ "$side" = old ] && dir=/root/repo_old
-  out=/root/repo/target/r17_ab_${TAG}_${side}${count[$side]}.json
+  dir="$NEW"; [ "$side" = old ] && dir="$OLD"
+  out="$NEW/target/ab_${TAG}_${side}${count[$side]}.json"
   ( cd "$dir" && SPARK_GRAFT_ONLY="$Q" SPARK_GRAFT_PASSES="$PASSES" \
       sbt -batch "runMain graft.Bench" 2>/dev/null \
     | grep '"metric":"total"' | tail -1 > "$out" )

@@ -128,8 +128,9 @@ object ComparePack {
           new SparkCompare(s, a, b,
             CompareConfig(joinColumns = keys, absTol = ToleranceSpec.of(absTol),
               assumeKeysUnique = hints._1, assumeKeysNullFree = hints._2,
-              // the raw (duplicate-pairing) compare serves one counts query:
-              // its single stats pass would never read a cache back
+              // the raw (duplicate-pairing) compare serves one counts query,
+              // which reads the stats alone: its single stats pass would
+              // fill a cache nothing reads back
               cacheIntermediates = !raw))
         }
       })

@@ -52,7 +52,9 @@ object Main {
       |                             session; paths resolve on the SERVER
       |  --backend NAME             engine selector (script compatibility;
       |                             only 'spark' is accepted)
-      |  --no-cache-intermediates   skip caching the merged join
+      |  --no-cache-intermediates   never cache the merged join (kept for
+      |                             scripts: a CLI report is one query over
+      |                             the join and caches nothing either way)
       |  --assume-keys-unique       promise join keys are unique per side:
       |                             plans a plain sort-merge join with no
       |                             pairing-rank windows. UNCHECKED — a

@@ -63,6 +63,10 @@ final case class CompareConfig(
     ignoreCase: Boolean = false,
     castColumnNamesLower: Boolean = true,
     customComparators: Seq[Comparator] = Nil,
+    /** Persist (MEMORY_AND_DISK) the merged join for the readers that read
+      * it again: the derived frames, a stats read on its own, and tolerance
+      * variants. The first of them fills it. A report on a compare nothing
+      * has read yet never caches: it runs as one query over the join. */
     cacheIntermediates: Boolean = true,
     /** UNCHECKED caller contract: Some(true) promises the join keys are
       * unique per frame, letting the engine plan a plain sort-merge join on

@@ -28,24 +28,28 @@ import graft.functions.{CompareOpts, ComparatorPipeline, TypeClasses}
   *     `graft.sources.Bucketing`, relies on it).
   *   - ALL statistics — per-column match counts, null diffs, max diffs, the
   *     all-columns-match row count, AND the merge-slice counts — are fused
-  *     into one single-pass aggregation over the cached join (reference runs
-  *     one agg for match counts, spark.py:573-578, plus TWO separate jobs
-  *     per column for max_diff/null_diff, spark.py:1026-1111, another
-  *     full-scan filter for count_matching_rows, spark.py:659-679, and
-  *     per-slice counts, spark.py:524-531 — O(columns) scans).
+  *     into one single-pass aggregation over the join (reference runs one
+  *     agg for match counts, spark.py:573-578, plus TWO separate jobs per
+  *     column for max_diff/null_diff, spark.py:1026-1111, another full-scan
+  *     filter for count_matching_rows, spark.py:659-679, and per-slice
+  *     counts, spark.py:524-531 — O(columns) scans).
   *   - Because the pairing is 1:1, `count(df1) = both + left_only` — input
   *     row counts cost no extra scan at all (reference counts each input and
   *     each slice, spark.py:524-531).
   *   - Every count is memoized; nothing is ever recounted.
   *   - Every sample the report shows (up to `sampleCount` mismatching rows
   *     per mismatching column, and the first rows of each unique-row slice)
-  *     comes from ONE query over the cached join: two jobs however many
-  *     columns mismatch (reference: one `limit` job per column and per
-  *     slice, spark.py:720-777). See [[sampleTables]].
+  *     comes from ONE query: two jobs however many columns mismatch
+  *     (reference: one `limit` job per column and per slice,
+  *     spark.py:720-777). See [[sampleTables]].
+  *   - A report on a compare nothing has read yet runs the stats pass and
+  *     the sample query as ONE query over the uncached join: its two
+  *     branches share the input exchange, and no cache is written. Every
+  *     other reader goes through [[mergedCached]].
   *
   * At 100 TB the dominant costs are the input scans, the one shuffle of
-  * both inputs, and the one stats pass over the cached join — all O(data),
-  * none O(columns × data).
+  * both inputs, and the one stats pass over the join — all O(data), none
+  * O(columns × data).
   */
 class SparkCompare(
     val spark: SparkSession,
@@ -233,16 +237,23 @@ class SparkCompare(
       rank): _*)
   }
 
-  /** The merged outer join, persisted when cacheIntermediates: every derived
-    * table (intersection, both unique-row slices) and every count reads this
-    * one relation, so one materialization serves the whole comparison.
-    * (The reference caches only intersect_rows, spark.py:532-535 — its
-    * unique-row slices re-run the join per action.) Shared by reference
-    * with tolerance variants. */
+  /** Whether this compare persisted [[mergedCached]]; only the root of a
+    * family of tolerance variants ever does. */
+  @volatile private var persisted = false
+
+  /** The merged outer join, persisted when cacheIntermediates, for the
+    * readers that read it again: the derived frames (intersection, both
+    * unique-row slices, `sampleMismatch`, `allMismatch`), a stats pass read
+    * on its own, and tolerance variants, which share it by reference. The
+    * first of them to run an action fills it. A report on a compare nothing
+    * has read yet never forces it (see [[sampleTables]]), so the CLI's one
+    * report writes no cache. (The reference caches only intersect_rows,
+    * spark.py:532-535 — its unique-row slices re-run the join per action.) */
   private lazy val mergedCached: DataFrame = parent.map(_.mergedCached).getOrElse {
-    if (config.cacheIntermediates)
+    if (config.cacheIntermediates) {
+      persisted = true
       merged.persist(StorageLevel.MEMORY_AND_DISK)
-    else merged
+    } else merged
   }
 
   /** left_only / right_only / both counts, folded into the single stats
@@ -386,12 +397,18 @@ class SparkCompare(
   private def fNullDiff(c: String) = s"__nulldiff_$c"
   private def fMaxDiff(c: String) = s"__maxdiff_$c"
 
+  /** The merged columns [[statsFrame]] reads without `alsoReads`. */
+  private def statsReads: Set[String] =
+    Set("_merge") ++ Option.when(pairsByRank)(rankCol) ++
+      compareColumns.flatMap(c => Seq(s"${c}_$n1", s"${c}_$n2"))
+
   /** THE single-pass statistics aggregation (see class doc): one scan of
-    * the cached join computes the per-column match counts, null diffs, max
-    * diffs, the all-columns-match row count, AND the three merge-slice
-    * counts — every `_merge != 'both'` row only feeds the slice tallies via
-    * the `isBoth` guards. */
-  private lazy val statsRow: Row = {
+    * `src` computes the per-column match counts, null diffs, max diffs, the
+    * all-columns-match row count, AND the three merge-slice counts — every
+    * `_merge != 'both'` row only feeds the slice tallies via the `isBoth`
+    * guards. `alsoReads` adds a `count` of each named merged column, which
+    * nothing reads back: it only makes the aggregate reference them. */
+  private def statsFrame(src: DataFrame, alsoReads: Seq[String] = Nil): DataFrame = {
     val isBoth = col("_merge") === "both"
     val perCol = compareColumns.flatMap { c =>
       val c1 = col(s"${c}_$n1")
@@ -426,14 +443,28 @@ class SparkCompare(
       sum(when(col("_merge") === "left_only", 1L).otherwise(0L)).as("__graft_left"),
       sum(when(col("_merge") === "right_only", 1L).otherwise(0L)).as("__graft_right"),
       sum(when(isBoth && allMatchCond, 1L).otherwise(0L)).as("__graft_all_match")) ++
-      Option.when(pairsByRank)(max(col(rankCol)).as("__graft_max_rank")) ++ perCol
-    mergedWithMatch.agg(exprs.head, exprs.tail: _*).first()
+      Option.when(pairsByRank)(max(col(rankCol)).as("__graft_max_rank")) ++ perCol ++
+      alsoReads.zipWithIndex.map { case (c, i) => count(col(c)).as(s"__graft_reads$i") }
+    withMatch(src).agg(exprs.head, exprs.tail: _*)
   }
 
-  /** The cached join plus one `{col}_match` per compared column, over every
-    * slice (the `_merge` guards pick the rows each reader wants). */
-  private def mergedWithMatch: DataFrame = mergedCached.select(
-    mergedCached.columns.map(col).toIndexedSeq ++ matchColumns(mergedCached): _*)
+  private var statsMemo: Option[Row] = None
+
+  /** The one stats row: filled by a fresh report's fused query (see
+    * [[sampleTables]]), or else by its own pass over the cached join. */
+  private def statsRow: Row = synchronized {
+    statsMemo.getOrElse {
+      val row = statsFrame(mergedCached).first()
+      statsMemo = Some(row)
+      row
+    }
+  }
+
+  /** `src` (the merged join) plus one `{col}_match` per compared column,
+    * over every slice (the `_merge` guards pick the rows each reader
+    * wants). */
+  private def withMatch(src: DataFrame): DataFrame =
+    src.select(src.columns.map(col).toIndexedSeq ++ matchColumns(src): _*)
 
   private def statLong(name: String): Long = {
     val i = statsRow.fieldIndex(name)
@@ -545,9 +576,14 @@ class SparkCompare(
 
   /** Assemble the immutable report data. All counts come from memoized
     * state — building the report triggers no recounting jobs (the reference
-    * re-counts via a per-call cache, base.py:291-293). */
+    * re-counts via a per-call cache, base.py:291-293). On a compare nothing
+    * has read yet, the stats come from the sample query (see
+    * [[sampleTables]]), so it runs first. */
   def buildReportData(sampleCount: Int = 10, columnCount: Int = 10): graft.report.ReportData = {
     import graft.report._
+    require(sampleCount >= 0, s"sampleCount must be non-negative, got $sampleCount")
+    require(columnCount >= 0, s"columnCount must be non-negative, got $columnCount")
+    val samples = sampleTables(sampleCount, columnCount)
     val columnSummary = ColumnSummary(
       commonColumns = intersectColumns.length,
       df1Unique = df1UnqColumns.length, df1UniqueColumns = df1UnqColumns,
@@ -569,9 +605,6 @@ class SparkCompare(
     val statList = columnStats.filterNot(_.allMatch).map(s =>
       MismatchStat(s.column, s.dtype1, s.dtype2, s.unequalCnt, s.maxDiff,
         s.nullDiff, s.relTol, s.absTol))
-    val samples = sampleTables(
-      columnStats.filter(s => !s.allMatch && s.unequalCnt > 0).map(_.column),
-      sampleCount, columnCount)
     val mismatchStats =
       if (statList.nonEmpty)
         MismatchStats(hasMismatches = true,
@@ -592,29 +625,53 @@ class SparkCompare(
       df2UniqueRows = uniqueRowsData(samples.df2Unique))
   }
 
-  /** Every sample table the report shows, rendered from ONE query over the
-    * cached join (the reference runs one `limit` job per mismatching column
-    * and per unique-row slice, spark.py:720-777). Each row the tables need
-    * gets one tag per table family it feeds (`explode` over an array of
+  /** Every sample table the report shows, rendered from ONE query (the
+    * reference runs one `limit` job per mismatching column and per
+    * unique-row slice, spark.py:720-777). Each row the tables need gets one
+    * tag per table family it feeds (`explode` over an array of
     * `when(<col>_match === false, i)` tags plus `left_only`/`right_only`),
-    * is numbered in the cached relation's own (partition, position) order
-    * by `monotonically_increasing_id`, and a `row_number` per tag keeps the
+    * is numbered in the join's own (partition, position) order by
+    * `monotonically_increasing_id`, and a `row_number` per tag keeps the
     * first `sampleCount`. That is the order `limit(n)` takes rows in, so
     * each table holds the rows [[sampleMismatch]] and a limited
     * [[df1UnqRows]]/[[df2UnqRows]] would show, in the same order. Spark
     * plans a partial `WindowGroupLimit` below the exchange, so the shuffle
-    * carries at most (#tags × sampleCount) rows per map task: two jobs
-    * (AQE map stage plus result) however many columns mismatch, none when
-    * nothing needs sampling. Masked cells never leave the executors; they
-    * render as the mask literal, typed as the masked frames type them. */
-  private def sampleTables(columns: Seq[String], sampleCount: Int, columnCount: Int): SparkCompare.Samples = {
+    * carries at most (#tags × sampleCount) rows per map task. Masked cells
+    * never leave the executors; they render as the mask literal, typed as
+    * the masked frames type them.
+    *
+    * Once anything has read the compare (the stats, a derived frame, a
+    * tolerance variant), the query reads the cached join and tags only the
+    * tables the stats select: two jobs (AQE map stage plus result) however
+    * many columns mismatch, none when nothing needs sampling.
+    *
+    * On a compare nothing has read yet, the query reads the uncached join,
+    * tags every table the stats could select, and carries the stats pass
+    * as a second branch of one `union`; the tables the stats select are
+    * rendered after it returns. AQE plans the join's input exchange once
+    * and the second branch reads it as a `ReusedExchange`, so the report
+    * costs one input shuffle and writes no cache. Exchange reuse
+    * needs both branches to prune the join to the same columns, so the
+    * stats branch also counts each merged column only the samples read.
+    * Nothing here may force [[mergedCached]] first: a persisted join would
+    * be substituted into the query, which would then fill it. The stats
+    * are aggregated, not observed: observed metrics ride on accumulators,
+    * which a re-run map stage may count twice. */
+  private def sampleTables(sampleCount: Int, columnCount: Int): SparkCompare.Samples = synchronized {
     import graft.report.TextTable
-    require(sampleCount >= 0, s"sampleCount must be non-negative, got $sampleCount")
-    val schema = mergedCached.schema
+    val fused = parent.isEmpty && statsMemo.isEmpty && !persisted
+    def mismatching = columnStats.filter(s => !s.allMatch && s.unequalCnt > 0).map(_.column)
+    // The tables the query collects rows for; a fused query cannot yet
+    // tell which of them the stats select.
+    val columns =
+      if (!fused) mismatching else if (onlyJoinColumns) joinColumns else compareColumns
+    val wantLeft = sampleCount > 0 && (fused || df1UnqCount > 0)
+    val wantRight = sampleCount > 0 && (fused || df2UnqCount > 0)
+    val schema = merged.schema
     // One collected column per distinct (merged column, display type),
     // placed after the tag and the id in each collected row.
     val slots = scala.collection.mutable.ArrayBuffer.empty[Column]
-    val slotOf = scala.collection.mutable.HashMap.empty[(String, DataType), Int]
+    val slotOf = scala.collection.mutable.LinkedHashMap.empty[(String, DataType), Int]
     type Cell = (StructField, Row => Any)
     def cell(header: String, name: String, masked: Boolean, as: Option[DataType] = None): Cell =
       if (masked) (StructField(header, StringType), _ => MaskValue)
@@ -629,8 +686,6 @@ class SparkCompare(
 
     val leftTag = columns.length
     val rightTag = leftTag + 1
-    val wantLeft = sampleCount > 0 && df1UnqCount > 0
-    val wantRight = sampleCount > 0 && df2UnqCount > 0
     var collected = Map.empty[Int, Seq[Row]]
     def rowsOf(tag: Int): Seq[Row] = collected.getOrElse(tag, Nil)
 
@@ -642,7 +697,7 @@ class SparkCompare(
         val (l, r) = (s"${c}_$n1", s"${c}_$n2")
         val widened =
           if (schema(l).dataType == schema(r).dataType) None
-          else Some(df1UnqRows.select(c).union(df2UnqRows.select(c)).schema.head.dataType)
+          else Some(merged.select(col(l).as(c)).union(merged.select(col(r).as(c))).schema.head.dataType)
         val (lc, rc) = (cell(c, l, maskedColumns(c), widened), cell(c, r, maskedColumns(c), widened))
         () => render(Seq(lc),
           (values(Seq(lc), rowsOf(leftTag)) ++ values(Seq(rc), rowsOf(rightTag))).take(sampleCount))
@@ -664,27 +719,38 @@ class SparkCompare(
     val df1Unique = unique(wantLeft, df1.columns.toSeq, n1, leftTag)
     val df2Unique = unique(wantRight, df2.columns.toSeq, n2, rightTag)
 
+    val src = if (fused) merged else mergedCached
     val merge = col("_merge")
     val tags =
       (if (onlyJoinColumns || sampleCount == 0) Nil
        else columns.zipWithIndex.map { case (c, i) => when(merge === "both" && col(s"${c}_match") === false, i) }) ++
         (if (wantLeft) Seq(when(merge === "left_only", leftTag)) else Nil) ++
         (if (wantRight) Seq(when(merge === "right_only", rightTag)) else Nil)
-    if (tags.nonEmpty) {
-      val slotNames = slots.indices.map(i => s"__graft_s$i")
-      collected = mergedWithMatch
-        .select(explode(array_compact(array(tags: _*))).as("__graft_tag") +:
-          slots.zip(slotNames).map { case (c, n) => c.as(n) }.toSeq: _*)
-        .select(col("__graft_tag") +: monotonically_increasing_id().as("__graft_id") +:
-          slotNames.map(col): _*)
-        .withColumn("__graft_rn",
-          row_number().over(Window.partitionBy("__graft_tag").orderBy("__graft_id")))
-        .where(col("__graft_rn") <= sampleCount)
-        .collect().toSeq
-        .groupBy(_.getInt(0))
-        .map { case (tag, rows) => tag -> rows.sortBy(_.getLong(1)) }
-    }
-    SparkCompare.Samples(mismatches.map(_()), df1Unique.map(_()), df2Unique.map(_()))
+    val slotNames = slots.indices.map(i => s"__graft_s$i")
+    val sampled = Option.when(tags.nonEmpty)(withMatch(src)
+      .select(explode(array_compact(array(tags: _*))).as("__graft_tag") +:
+        slots.zip(slotNames).map { case (c, n) => c.as(n) }.toSeq: _*)
+      .select(col("__graft_tag") +: monotonically_increasing_id().as("__graft_id") +:
+        slotNames.map(col): _*)
+      .withColumn("__graft_rn",
+        row_number().over(Window.partitionBy("__graft_tag").orderBy("__graft_id")))
+      .where(col("__graft_rn") <= sampleCount))
+    val rows =
+      if (!fused) sampled.fold(Seq.empty[Row])(_.collect().toSeq)
+      else {
+        val stats = statsFrame(src, slotOf.keys.map(_._1).toSeq.distinct.filterNot(statsReads))
+        val statsBranch = stats.select(struct(col("*")).as("__graft_stats"))
+        val query = sampled.fold(statsBranch)(_.unionByName(statsBranch, allowMissingColumns = true))
+        val at = query.schema.fieldIndex("__graft_stats")
+        val (statRows, sampleRows) = query.collect().toSeq.partition(!_.isNullAt(at))
+        statsMemo = Some(statRows.head.getStruct(at))
+        sampleRows
+      }
+    collected = rows.groupBy(_.getInt(0)).map { case (tag, rs) => tag -> rs.sortBy(_.getLong(1)) }
+    // Render the tables the stats select.
+    SparkCompare.Samples(mismatching.map(c => mismatches(columns.indexOf(c))()),
+      df1Unique.filter(_ => df1UnqCount > 0).map(_()),
+      df2Unique.filter(_ => df2UnqCount > 0).map(_()))
   }
 
   /** Render the text report; optionally save the HTML form and/or render
@@ -700,8 +766,9 @@ class SparkCompare(
     text
   }
 
-  /** Release the cached join (shared with tolerance variants). */
-  def unpersist(): Unit = if (config.cacheIntermediates) mergedCached.unpersist()
+  /** Release the cached join (shared with tolerance variants), if one was
+    * persisted; a compare whose join was never cached registers nothing. */
+  def unpersist(): Unit = parent.fold(if (persisted) mergedCached.unpersist())(_.unpersist())
 }
 
 object SparkCompare {
