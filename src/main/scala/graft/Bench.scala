@@ -1,7 +1,27 @@
 package graft
 object Bench {
+  /** Whether the host throttled a run: the CPU canary's median rose past
+    * 1.5× the run's own clean `probeBaseline` (throttle windows dilate it
+    * 2-40×), or steal took over 5% of the host's CPU time. Unlike `vs_min`,
+    * neither reads a smaller host than the minimums' as throttled. */
+  private[graft] def throttled(canaryMedian: Double, probeBaseline: Double,
+      stealShare: Double): Boolean =
+    canaryMedian > probeBaseline * 1.5 || stealShare > 0.05
+
+  /** (steal, total) CPU time so far from /proc/stat's `cpu` line (user
+    * nice system idle iowait irq softirq steal); None where unreadable. */
+  private def cpuTimes(): Option[(Long, Long)] =
+    try {
+      val src = scala.io.Source.fromFile("/proc/stat")
+      try src.getLines().find(_.startsWith("cpu ")).map { l =>
+        val f = l.trim.split("\\s+").slice(1, 9).map(_.toLong)
+        (f(7), f.sum)
+      } finally src.close()
+    } catch { case _: Exception => None }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    val cpuAtStart = cpuTimes()
     // A/B toggle for the wide-plan optimizer cost experiment (SCALE.md):
     //   SPARK_GRAFT_CONSTRAINT_PROP=false
     val spark = HarnessSession("spark.sql.constraintPropagation.enabled" ->
@@ -113,7 +133,7 @@ object Bench {
     // disk by an earlier run are reused when the source stamp matches.
     step("indexes") {
       OpsPack.prepareIndexes(spark, sfDir)
-      graft.operators.Dedup.releaseCaches()
+      graft.operators.CacheScope.releaseAll()
     }
     // Optional name filter for iterating on a single family:
     //   SPARK_GRAFT_ONLY=q_compare_all_mismatch,q_compare_column_stats
@@ -210,7 +230,7 @@ object Bench {
       // regressed alphabetically-later queries 1.5-23x). The compare-family
       // caches (uniqueKeyed + cached intersections) ARE shared across the
       // q_compare_* queries by design and stay.
-      graft.operators.Dedup.releaseCaches()
+      graft.operators.CacheScope.releaseAll()
       best(name) = math.min(best.getOrElse(name, Double.MaxValue), elapsed)
     }
     val results = selected.map { case (name, _) => name -> best(name) }
@@ -311,27 +331,18 @@ object Bench {
     val ioSorted = ioProbeLog.toIndexedSeq.sorted
     val ioCanaryJson =
       s""""io_canary_min":${sec4(pct(ioSorted, 0.0))},"io_canary_median":${sec4(pct(ioSorted, 0.5))},"io_canary_p90":${sec4(pct(ioSorted, 0.9))},"io_canary_max":${sec4(pct(ioSorted, 1.0))},"io_canary_n":${ioSorted.length}"""
-    // Sustained-throttle adjudication, the canary's documented blind spot
-    // (judge r15: a sweep ran uniformly ~1.3× slow — sustained frequency
-    // cap or IO contention, not the 2-40× windows the fixed-work probe
-    // catches — and its flat canary let 268s read as clean against a
-    // 170.6s minimum). Elapsed-vs-minimum IS the detector: emit it plus
-    // an explicit flag so a silently-degraded total can never be taken at
-    // face value again. HEALTHY queries only on BOTH sides — `total` sums
-    // an errored query's fail-fast elapsed while `totalMin` substitutes
-    // its history minimum, so the total/totalMin quotient compares
-    // mismatched sets the moment anything errors (a 30s-history query
-    // failing in 0.1s would mask a genuinely throttled sweep; a first-run
-    // query erroring after 60s would flag a clean one) — review r16.
-    // 1.15 is the adjudication threshold from the r15 postmortem; a
-    // first-ever run (no history) reads 1.0 by construction.
+    // Elapsed over the committed minimums, healthy queries only on both
+    // sides (`totalMin` substitutes an errored query's history minimum).
+    // It reads the host's core count as much as any throttling.
     val healthyElapsed = healthy.map(_._2).sum
     val healthyMin = healthy.map { case (k, v) =>
       math.min(v, minSoFar.getOrElse(k, v))
     }.sum
     val vsMin = if (healthyMin > 0.0) healthyElapsed / healthyMin else 1.0
+    val stealShare = (for ((s0, t0) <- cpuAtStart; (s1, t1) <- cpuTimes() if t1 > t0)
+      yield (s1 - s0).toDouble / (t1 - t0)).getOrElse(0.0)
     val throttleJson =
-      s""""vs_min":${sec4(vsMin)},"throttled":${vsMin > 1.15}"""
+      s""""vs_min":${sec4(vsMin)},"steal_share":${sec4(stealShare)},"throttled":${throttled(pct(probesSorted, 0.5), probeBaseline, stealShare)}"""
     val fullLine =
       s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"errors":$errJson,"min_so_far":$minJson,"total_min_so_far":$totalMin,$canaryJson,$ioCanaryJson,$throttleJson,"sf":"$sfDir"}"""
     // The full per-query line is ~7 KB at 170+ queries; the round driver
@@ -395,7 +406,7 @@ object Bench {
     head.append("}").append(s""","n_queries_included":$included""").append(tailFixed)
     println(head.toString)
     if (errors.nonEmpty) System.err.println(s"[bench] ${errors.size} queries failed: ${errors.keys.mkString(", ")}")
-    graft.operators.Dedup.releaseCaches()
+    graft.operators.CacheScope.releaseAll()
     HarnessSession.stop(spark)
   }
 }

@@ -23,7 +23,7 @@ object DumpPlans {
     val spark = HarnessSession("spark.sql.maxPlanStringLength" -> "262144")
     spark.sparkContext.setLogLevel("ERROR")
     OpsPack.prepareIndexes(spark, sfDir)
-    graft.operators.Dedup.releaseCaches()
+    graft.operators.CacheScope.releaseAll()
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
     val names = SparkEntry.queries.keys.toSeq.sorted
       .filter(n => only.forall(_.contains(n)))
@@ -41,7 +41,7 @@ object DumpPlans {
         failed += 1
         System.err.println(s"[plans] $name FAILED: ${e.getMessage}")
       }
-      graft.operators.Dedup.releaseCaches()
+      graft.operators.CacheScope.releaseAll()
     }
     System.err.println(s"[plans] ${names.size - failed}/${names.size} plans written to $outDir")
     spark.stop()

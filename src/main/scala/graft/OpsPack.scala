@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.operators.{Ann, Dedup, Ivf, Multimodal, Preference, Sampling, TextOps, TrainOrder}
+import graft.operators.{Ann, CacheScope, Dedup, Ivf, Multimodal, Preference, Sampling, TextOps, TrainOrder}
 
 /** Driver queries for the training-data pipeline operators (dedup,
   * similarity search, text analysis, multimodal), with DuckDB oracles where
@@ -136,10 +136,10 @@ object OpsPack {
     * under the cluster-safe labels; the oracle mirrors the MinHash pairs,
     * the recursive component closure, the min-id representative, and the
     * md5-bucket split of the REP id. */
-  def splitClusterSafe(s: SparkSession, dir: String): DataFrame = Dedup.newCacheScope {
+  def splitClusterSafe(s: SparkSession, dir: String): DataFrame = CacheScope.pass {
     import graft.operators.Sampling
     val d = docs(s, dir)
-    val pairs = Dedup.cacheShared(
+    val pairs = CacheScope.persist(
       Dedup.minhashNearDuplicatesMd5(d, "text", "doc_id", threshold = 0.5,
         numHashes = 64, bands = 16).select("id1", "id2"))
     Sampling.withClusterSafeSplit(d.select(col("doc_id")), "doc_id", pairs)
@@ -1445,14 +1445,14 @@ object OpsPack {
     * "column" of the bucketed two-phase machinery — no per-group full
     * sort), then one broadcast join + counting pass tallies survivors.
     * Output: (lang, n_docs, threshold, n_kept). */
-  def qualityAdaptive(s: SparkSession, dir: String): DataFrame = Dedup.newCacheScope {
+  def qualityAdaptive(s: SparkSession, dir: String): DataFrame = CacheScope.pass {
     import graft.operators.Profile
     // the regex-heavy quality score is the expensive projection and every
     // downstream pass (per-group stats, rank-selection histogram, hit-bucket
     // sort, final tally) re-reads it — cache the scored frame so the corpus
     // pays ONE heavy text scan + three cheap cached reads (the 100 TB idiom
-    // is persisting the score column; cacheShared is its in-session twin)
-    val scored = Dedup.cacheShared(docs(s, dir).select(col("doc_id"), col("lang"),
+    // is persisting the score column; CacheScope.persist is its in-session twin)
+    val scored = CacheScope.persist(docs(s, dir).select(col("doc_id"), col("lang"),
       TextOps.qualityScore(col("text")).as("quality_score")))
     val thr = Profile.thresholdsByGroup(scored, "lang", "quality_score", 3, 4)
     scored.join(broadcast(thr), Seq("lang"))
@@ -2683,6 +2683,9 @@ object OpsPack {
   val CleanCorpusHashes = 32
   val CleanCorpusBands = 8
 
+  /** Owns the two pass-shared frames below ([[releaseSharedFrames]]). */
+  private val sharedFrames = new CacheScope
+
   private val strippedDocsCache =
     scala.collection.concurrent.TrieMap[String, DataFrame]()
 
@@ -2699,7 +2702,7 @@ object OpsPack {
       val stripped = docs(s, dir)
         .select(col("doc_id"), col("lang"), col("source"),
           TextOps.stripMarkup(syntheticHtml).as("clean_text"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        .transform(sharedFrames.persist)
       stripped.count()
       stripped
     })
@@ -2721,7 +2724,7 @@ object OpsPack {
       val cleaned = Dedup.cleanCorpus(strippedDocs(s, dir), "clean_text",
         "doc_id", nearDupThreshold = 0.5, portableHashes = true,
         numHashes = CleanCorpusHashes, bands = CleanCorpusBands)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        .transform(sharedFrames.persist)
       cleaned.count()
       cleaned
     })
@@ -2731,9 +2734,8 @@ object OpsPack {
     * ladder exactly once — the fusion saves the DUPLICATE subplan, it
     * must not let pass-2 minimums report the ladder as free. */
   def releaseSharedFrames(): Unit = {
-    cleanedStrippedCache.values.foreach(_.unpersist(true))
+    sharedFrames.release()
     cleanedStrippedCache.clear()
-    strippedDocsCache.values.foreach(_.unpersist(true))
     strippedDocsCache.clear()
   }
 
@@ -2967,7 +2969,7 @@ object OpsPack {
     * pipeline from the generator's closed pixel forms — decode, resample,
     * threshold, banding included. Output: (id1, id2, hamming). */
   private def phashPairs(s: SparkSession, dir: String, method: String): DataFrame =
-    Dedup.newCacheScope {
+    CacheScope.pass {
       val d = docs(s, dir)
       val base = d.select(col("doc_id").as("media_id"),
         col("doc_id").as("base_id"), lit(0).as("bump"))
@@ -2979,7 +2981,7 @@ object OpsPack {
       // the banded pair join reads the signature frame on BOTH sides — cache
       // the hashes so the encode+decode codec pass runs once, not twice (at
       // layout scale you'd persist the hash column; this is the in-session twin)
-      val hashes = Dedup.cacheShared(Multimodal.perceptualHashes(media, method)
+      val hashes = CacheScope.persist(Multimodal.perceptualHashes(media, method)
         .select(col("media_id").as("id"), col("phash").as("sh")))
       Dedup.simhashPairsFromSignatures(hashes, maxHamming = PhashMaxHamming)
         .orderBy("id1", "id2")
@@ -3018,7 +3020,7 @@ object OpsPack {
     * oracle mirrors the whole pipeline from the generator's closed sample
     * forms. Output: (id1, id2, hamming). */
   def multimodalNearDupAudio(s: SparkSession, dir: String): DataFrame =
-    Dedup.newCacheScope {
+    CacheScope.pass {
       val d = docs(s, dir)
       val base = d.select(col("doc_id").as("media_id"),
         col("doc_id").as("base_id"), lit(0).as("bump"))
@@ -3028,7 +3030,7 @@ object OpsPack {
       val media = Multimodal.syntheticAudioVariants(
         base.union(variants), "media_id", "base_id", "bump")
       // cache: the banded pair join reads the fingerprint frame twice
-      val hashes = Dedup.cacheShared(Multimodal.audioFingerprints(media)
+      val hashes = CacheScope.persist(Multimodal.audioFingerprints(media)
         .select(col("media_id").as("id"), col("afp").as("sh")))
       Dedup.simhashPairsFromSignatures(hashes, maxHamming = AudioMaxHamming)
         .orderBy("id1", "id2")
@@ -3094,7 +3096,7 @@ object OpsPack {
     * carry). The shape a curation pipeline runs daily: dedup the new
     * delivery against the indexed corpus without rescanning the corpus. */
   def multimodalProbeIndex(s: SparkSession, dir: String): DataFrame =
-    Dedup.newCacheScope {
+    CacheScope.pass {
       val d = docs(s, dir)
       val path = Memo.memo(phashIndexCache, dir, {
         val p = "target/graft_phash_index_" +
@@ -3113,7 +3115,7 @@ object OpsPack {
           col("doc_id").as("base_id"), lit(1).as("bump"))
       // cached: the banded probe derivation reads the hash frame twice
       // (partition-list collect + candidate join)
-      val probes = Dedup.cacheShared(Multimodal.perceptualHashes(
+      val probes = CacheScope.persist(Multimodal.perceptualHashes(
         Multimodal.syntheticStillVariants(variants, "media_id", "base_id", "bump")))
       Multimodal.phashProbeIndex(s, path, probes, PhashMaxHamming)
         .orderBy("probe_id", "corpus_id")
@@ -3133,7 +3135,7 @@ object OpsPack {
     * id1 < id2 matches the oracle's. Output: one row per video pair with
     * any frame pair within the budget. */
   def multimodalNearDupVideo(s: SparkSession, dir: String): DataFrame =
-    Dedup.newCacheScope {
+    CacheScope.pass {
       val d = docs(s, dir)
       val base = d.select(col("doc_id").as("media_id"),
         col("doc_id").as("base_id"), lit(0).as("bump"))
@@ -3143,7 +3145,7 @@ object OpsPack {
       val media = Multimodal.syntheticVideoVariants(
         base.union(variants), "media_id", "base_id", "bump")
       // cache: the banded pair join reads the frame-hash frame twice
-      val fh = Dedup.cacheShared(Multimodal.videoFrameHashes(media)
+      val fh = CacheScope.persist(Multimodal.videoFrameHashes(media)
         .select((col("media_id") * 8 + col("frame")).as("id"),
           col("phash").as("sh")))
       Dedup.simhashPairsFromSignatures(fh, maxHamming = PhashMaxHamming)
@@ -3212,7 +3214,7 @@ object OpsPack {
     * block-value partitions, and must surface exactly the ≤ maxHamming
     * probe×corpus pairs. The daily-delivery dedup shape, audio edition. */
   def multimodalProbeIndexAudio(s: SparkSession, dir: String): DataFrame =
-    Dedup.newCacheScope {
+    CacheScope.pass {
       val d = docs(s, dir)
       val path = Memo.memo(audioIndexCache, dir, {
         val p = "target/graft_audio_index_" +
@@ -3232,7 +3234,7 @@ object OpsPack {
           col("doc_id").as("base_id"), lit(1).as("bump"))
       // cached: the banded probe derivation reads the fingerprint frame
       // twice (partition-list collect + candidate join)
-      val probes = Dedup.cacheShared(Multimodal.audioFingerprints(
+      val probes = CacheScope.persist(Multimodal.audioFingerprints(
         Multimodal.syntheticAudioVariants(variants, "media_id", "base_id", "bump"))
         .select(col("media_id"), col("afp").as("phash")))
       Multimodal.phashProbeIndex(s, path, probes, AudioMaxHamming)
@@ -3254,7 +3256,7 @@ object OpsPack {
     * exactly (pigeonhole recall-completeness at the index's own
     * maxHamming). The daily-delivery dedup shape, video edition. */
   def multimodalProbeIndexVideo(s: SparkSession, dir: String): DataFrame =
-    Dedup.newCacheScope {
+    CacheScope.pass {
       val d = docs(s, dir)
       val path = Memo.memo(videoIndexCache, dir, {
         val p = "target/graft_video_index_" +
@@ -3275,7 +3277,7 @@ object OpsPack {
           col("doc_id").as("base_id"), lit(1).as("bump"))
       // cached: the banded probe derivation reads the frame-hash frame
       // twice (partition-list collect + candidate join)
-      val probes = Dedup.cacheShared(Multimodal.videoFrameHashes(
+      val probes = CacheScope.persist(Multimodal.videoFrameHashes(
         Multimodal.syntheticVideoVariants(variants, "media_id", "base_id", "bump"))
         .select((col("media_id") * 8 + col("frame")).as("media_id"),
           col("phash")))
@@ -4065,12 +4067,12 @@ object OpsPack {
     * one shuffle of (column, value) pairs), then staging is a pure
     * comparison expression and the rollup a grouped count. A global
     * `ntile` window would sort the corpus on one partition. */
-  def docsCurriculum(s: SparkSession, dir: String): DataFrame = Dedup.newCacheScope {
+  def docsCurriculum(s: SparkSession, dir: String): DataFrame = CacheScope.pass {
     import graft.operators.TextOps
     // cached: consumed by the percentile probe AND the staged rollup —
     // uncached, the quality-score/token-count text expressions (the
     // query's dominant cost) ran over the corpus twice
-    val scored = Dedup.cacheShared(docs(s, dir).select(col("doc_id"), col("lang"),
+    val scored = CacheScope.persist(docs(s, dir).select(col("doc_id"), col("lang"),
       TextOps.qualityScore(col("text")).as("q"),
       TextOps.tokenCount(col("text")).cast("long").as("n_tokens")))
     val prof = graft.operators.Profile.numericProfile(

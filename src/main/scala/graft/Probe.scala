@@ -69,7 +69,7 @@ object Probe {
     val passes = math.max(1, sys.env.getOrElse("SPARK_GRAFT_PASSES", "2").toInt)
     // persisted-layout fixtures stage exactly as the bench does (untimed)
     OpsPack.prepareIndexes(spark, sfDir)
-    graft.operators.Dedup.releaseCaches()
+    graft.operators.CacheScope.releaseAll()
     spark.sparkContext.addSparkListener(listener)
     for (pass <- 1 to passes; name <- names) {
       val fn = SparkEntry.queries.getOrElse(name,
@@ -81,7 +81,7 @@ object Probe {
       // give the async listener bus a beat so job lines land before the total
       Thread.sleep(300)
       System.err.println(f"[probe] ===== pass $pass $name total ${elapsed}%.3fs =====")
-      graft.operators.Dedup.releaseCaches()
+      graft.operators.CacheScope.releaseAll()
       OpsPack.releaseSharedFrames()
     }
     HarnessSession.stop(spark)

@@ -267,10 +267,10 @@ object ScaleCheck {
       .map { case (name, f) =>
       System.err.println(s"[scale] $name @1x")
       val t1 = time(f(li1, ord1, doc1, ev1, 1))
-      graft.operators.Dedup.releaseCaches()
+      graft.operators.CacheScope.releaseAll()
       System.err.println(s"[scale] $name @${mult}x")
       val tn = time(f(liN, ordN, docN, evN, mult))
-      graft.operators.Dedup.releaseCaches()
+      graft.operators.CacheScope.releaseAll()
       val ratio = tn / math.max(t1, 1e-9)
       f""""$name":{"t1":$t1%.2f,"tN":$tn%.2f,"ratio":$ratio%.2f}"""
     }

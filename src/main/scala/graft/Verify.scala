@@ -232,7 +232,7 @@ object Verify {
             if (!cachesCleared) {
               cachesCleared = true
               try spark.catalog.clearCache() catch { case _: Throwable => () }
-              graft.operators.Dedup.releaseCaches()
+              graft.operators.CacheScope.releaseAll()
               try spark.catalog.refreshByPath(sfDir) catch { case _: Throwable => () }
             }
             if (rerun("post-cache-clear") == 0L)
@@ -259,7 +259,7 @@ object Verify {
     }
     System.err.println(
       f"[verify] all ${selected.size} queries in ${(System.nanoTime() - t0) / 1e9}%.1fs")
-    graft.operators.Dedup.releaseCaches()
+    graft.operators.CacheScope.releaseAll()
     spark.stop()
   }
 

@@ -221,9 +221,9 @@ object Ann {
     * fixed-order add, so margins mirror bit-exactly. Zero denominators
     * (all-orthogonal neighborhoods) yield margin 0 by convention. */
   def mutualNearestNeighborsWithMargin(big: DataFrame, small: DataFrame,
-      vecCol: String, idCol: String, k: Int = 2): DataFrame = Dedup.newCacheScope {
+      vecCol: String, idCol: String, k: Int = 2): DataFrame = CacheScope.pass {
     require(k >= 1, s"k must be >= 1, got $k")
-    val scored = Dedup.cacheShared(
+    val scored = CacheScope.persist(
       big.select(col(idCol).as("a_id"), col(vecCol).as("__av"))
         .crossJoin(broadcast(
           small.select(col(idCol).as("b_id"), col(vecCol).as("__bv"))))
@@ -289,7 +289,7 @@ object Ann {
     * lower `bits` to trade cost for recall. */
   def mutualNearestNeighborsLsh(a: DataFrame, b: DataFrame,
       vecCol: String, idCol: String, dim: Int,
-      bits: Int = 8, tables: Int = 16): DataFrame = Dedup.newCacheScope {
+      bits: Int = 8, tables: Int = 16): DataFrame = CacheScope.pass {
     val scored = lshCandidateScores(a, b, vecCol, idCol, dim, bits, tables)
     bestPerSide(scored, "a_id", "b_id")
       .join(bestPerSide(scored, "b_id", "a_id").drop("cosine"), Seq("a_id", "b_id"))
@@ -304,7 +304,7 @@ object Ann {
     * add 0, zero denominators → margin 0. */
   def mutualNearestNeighborsLshWithMargin(a: DataFrame, b: DataFrame,
       vecCol: String, idCol: String, dim: Int,
-      bits: Int = 8, tables: Int = 16, k: Int = 2): DataFrame = Dedup.newCacheScope {
+      bits: Int = 8, tables: Int = 16, k: Int = 2): DataFrame = CacheScope.pass {
     require(k >= 1, s"k must be >= 1, got $k")
     val scored = lshCandidateScores(a, b, vecCol, idCol, dim, bits, tables)
     val mutual = bestPerSide(scored, "a_id", "b_id")
@@ -336,7 +336,7 @@ object Ann {
       norm(col(vecCol)).as("__na"))
     val eb = b.select(col(idCol).as("b_id"), col(vecCol).as("__bv"),
       norm(col(vecCol)).as("__nb"))
-    Dedup.cacheShared(candidates.join(ea, "a_id").join(eb, "b_id")
+    CacheScope.persist(candidates.join(ea, "a_id").join(eb, "b_id")
       .select(col("a_id"), col("b_id"),
         when(col("__na") * col("__nb") === 0.0, lit(0.0))
           .otherwise(dot(col("__av"), col("__bv")) / (col("__na") * col("__nb")))
@@ -651,11 +651,11 @@ object Ann {
   def lshProbeIndexResolved(spark: SparkSession, path: String,
       corpusForIds: DataFrame => DataFrame, batch: DataFrame,
       vecCol: String, idCol: String, threshold: Double): DataFrame =
-    Dedup.newCacheScope {
+    CacheScope.pass {
     val (dim, bits, tables, prefixBits) = lshSigIndexParams(path)
     // two consumers (partition-list collect + candidate join): cache so the
     // batch signs itself ONCE per probe, not once per consumer
-    val bsigs = Dedup.cacheShared(batch.select(col(idCol).as("batch_id"),
+    val bsigs = CacheScope.persist(batch.select(col(idCol).as("batch_id"),
       posexplode(lshTableSignatures(col(vecCol), dim, bits, tables))
         .as(Seq("tbl", "sig")))
       .withColumn("tp", col("tbl").cast("long") * lit(1L << prefixBits)
@@ -666,7 +666,7 @@ object Ann {
     val idx = spark.read.parquet(path).where(col("tp").isin(wanted: _*))
     // cached: the final join reads it, and the resolver may run an action
     // of its own (a bucket-list collect) to derive a pruned corpus read
-    val candidates = Dedup.cacheShared(bsigs.join(idx, Seq("tbl", "sig"))
+    val candidates = CacheScope.persist(bsigs.join(idx, Seq("tbl", "sig"))
       .select(col("batch_id"), col("id").as("corpus_id")).distinct())
     val bv = batch.select(col(idCol).as("batch_id"), col(vecCol).as("__bv"),
       norm(col(vecCol)).as("__bn"))

@@ -25,9 +25,9 @@ object Collocations {
     * unigram counts and exact lift. `minCount` prunes the rare tail before
     * ranking. Output: (w1, w2, c_xy, c_x, c_y, lift). */
   def topBigrams(df: DataFrame, textCol: String, k: Int,
-      minCount: Long = 2L): DataFrame = Dedup.newCacheScope {
+      minCount: Long = 2L): DataFrame = CacheScope.pass {
     val spark = df.sparkSession
-    val toks = Dedup.cacheShared(
+    val toks = CacheScope.persist(
       df.selectExpr(
         s"filter(split(lower(`$textCol`), '[^a-z0-9]+'), x -> length(x) > 0) AS t")
         .where(expr("size(t) > 0")))

@@ -19,86 +19,6 @@ import org.apache.spark.sql.functions._
   */
 object Dedup {
 
-  // Postings/shingle frames persisted by the pair operators, so sessions
-  // running many dedup passes can release them (persist without a handle
-  // would otherwise pin disk-backed blocks until session shutdown). Two
-  // registries: a THREAD-LOCAL one scoping the per-pass auto-release (so a
-  // concurrent verify/benchmark pool thread entering a new pass releases
-  // only ITS previous pass's caches, never a cache another in-flight query
-  // on a sibling thread is still reading — cross-thread eviction caused
-  // recomputation storms under the 8-thread verify sweep), and a global one
-  // so releaseCaches() can still drain everything at session handoff.
-  private val allCachedFrames = new java.util.concurrent.ConcurrentLinkedQueue[DataFrame]()
-  // thread-local entries hold WEAK references: after a global releaseCaches()
-  // drain, a pool thread that never runs another pass must not pin the
-  // unpersisted frames' plan graphs for the rest of the session — once the
-  // global queue drops the strong reference, GC can reclaim them
-  private val threadCachedFrames =
-    new ThreadLocal[java.util.ArrayDeque[java.lang.ref.WeakReference[DataFrame]]] {
-      override def initialValue(): java.util.ArrayDeque[java.lang.ref.WeakReference[DataFrame]] =
-        new java.util.ArrayDeque[java.lang.ref.WeakReference[DataFrame]]()
-    }
-
-  private[graft] def cacheShared(df: DataFrame): DataFrame = {
-    val p = df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    allCachedFrames.add(p)
-    threadCachedFrames.get().add(new java.lang.ref.WeakReference(p))
-    p
-  }
-
-  // Caches are scoped PER PASS: each public pair-operator entry releases the
-  // previous pass's postings before registering its own, so a long-running
-  // session interleaving many corpora never accumulates dead cache blocks
-  // (round-3 verdict: the global queue leaked until someone remembered to
-  // call releaseCaches()). The depth guard keeps composite operators
-  // (cleanCorpus → minhashNearDuplicates*) from releasing their OWN caches
-  // when they call other wrapped operators internally. Release is
-  // cooperative: unpersisting a frame another lazy plan still references
-  // only costs recomputation, never correctness — so materialize (or copy)
-  // a pass's result before starting the next pass if you need it cheap.
-  private val scopeDepth = new ThreadLocal[Integer] {
-    override def initialValue(): Integer = 0
-  }
-
-  private[graft] def newCacheScope[T](f: => T): T = {
-    val d = scopeDepth.get()
-    if (d == 0) releaseThreadCaches()
-    scopeDepth.set(d + 1)
-    try f finally scopeDepth.set(d)
-  }
-
-  /** Release only the caches registered by passes run on the CURRENT
-    * thread — the per-pass auto-release scope, and the right call for any
-    * long-running loop (a streaming foreachBatch) that wants to drop its
-    * OWN pass's caches between iterations without evicting caches that
-    * concurrent queries on sibling threads are reading. */
-  def releaseOwnCaches(): Unit = releaseThreadCaches()
-
-  private def releaseThreadCaches(): Unit = {
-    val q = threadCachedFrames.get()
-    var ref = q.poll()
-    while (ref != null) {
-      val d = ref.get()
-      // a frame missing from the global registry was already released by a
-      // session-wide drain (or GC'd entirely) — just drop the reference
-      if (d != null && allCachedFrames.remove(d)) d.unpersist(blocking = true)
-      ref = q.poll()
-    }
-  }
-
-  /** Unpersist every postings cache created by the dedup pair operators on
-    * ANY thread. For explicit whole-session cleanup (benchmark harness
-    * between queries, session handoff); per-pass scoping uses the
-    * thread-local registry instead. Results already materialized are
-    * unaffected (lazy consumers recompute); double-unpersist (a frame also
-    * still referenced by a thread-local queue) is a no-op. */
-  def releaseCaches(): Unit = {
-    // blocking = true: the next pass (or benchmark query) should start with
-    // the storage pool actually drained, not with eviction queued behind it.
-    var d = allCachedFrames.poll()
-    while (d != null) { d.unpersist(blocking = true); d = allCachedFrames.poll() }
-  }
-
   /** Connected components over an undirected pair graph via iterative
     * min-label propagation: each round, every node adopts the smallest
     * label among itself and its neighbours; converged when no label moves.
@@ -226,11 +146,11 @@ object Dedup {
       nearDupThreshold: Double = 0.8,
       portableHashes: Boolean = false,
       numHashes: Int = 64,
-      bands: Int = 16): DataFrame = newCacheScope {
+      bands: Int = 16): DataFrame = CacheScope.pass {
     val quality = df.where(!TextOps.lowQualityFlag(col(textCol)))
     // two consumers (near-dup discovery + the final anti-join): persist so
     // the fingerprint groupBy + semi-join lineage runs once
-    val exact = cacheShared(exactDedup(quality, textCol, idCol))
+    val exact = CacheScope.persist(exactDedup(quality, textCol, idCol))
     val pairs =
       if (portableHashes)
         minhashNearDuplicatesMd5(exact, textCol, idCol, nearDupThreshold,
@@ -289,7 +209,7 @@ object Dedup {
       idCol: String,
       n: Int = 3,
       threshold: Double = 0.5,
-      maxDocFrequency: Long = Long.MaxValue): DataFrame = newCacheScope {
+      maxDocFrequency: Long = Long.MaxValue): DataFrame = CacheScope.pass {
     // postings carry 64-bit gram hashes, not strings: ~4× smaller shuffle
     // and primitive join keys (collision odds at 64 bits are negligible)
     val grams = df.select(col(idCol).as("id"), TextOps.wordShingles(col(textCol), n).as("g"))
@@ -307,7 +227,7 @@ object Dedup {
         // (guide §1.2: remove the duplicate input pass first). Postings
         // are two longs per (doc, gram); the downstream `filtered` cache
         // then fills from this one with a map-side anti join.
-        val g = cacheShared(grams)
+        val g = CacheScope.persist(grams)
         // toDF breaks the self-join lineage: without fresh attribute IDs the
         // anti-join condition resolves both sides to the SAME attribute and
         // drops every row.
@@ -319,7 +239,7 @@ object Dedup {
     // join); without persistence the regex shingling stage re-executes for
     // each. Postings are two longs per (doc, gram) — far smaller than the
     // input text — so caching them is the right trade at any scale.
-    val filtered = cacheShared(filteredPlan)
+    val filtered = CacheScope.persist(filteredPlan)
     val sizes = filtered.groupBy("id").agg(count(lit(1)).as("sz"))
     // postings carry their document's gram-set size so (a) the classic
     // length filter prunes size-incompatible pairs BEFORE the pair
@@ -461,12 +381,12 @@ object Dedup {
       threshold: Double = 0.5,
       numHashes: Int = 64,
       bands: Int = 16,
-      shingleSize: Int = 3): DataFrame = newCacheScope {
+      shingleSize: Int = 3): DataFrame = CacheScope.pass {
     // shared by the signature pass and both verification sides — persist so
     // the regex shingling runs once (same rationale as jaccardPairs)
     val shingled = df.select(col(idCol).as("id"),
       TextOps.wordShingles(col(textCol), shingleSize).as("g"))
-      .transform(cacheShared)
+      .transform(CacheScope.persist)
     val withSig = minhashSignaturesMd5(shingled, numHashes)
     val candidates = lshCandidatePairs(withSig, "id", numHashes, bands)
     val g1 = shingled.toDF("id1", "g1")
@@ -601,15 +521,15 @@ object Dedup {
       threshold: Double = 0.5,
       numHashes: Int = 64,
       bands: Int = 16,
-      shingleSize: Int = 3): DataFrame = newCacheScope {
+      shingleSize: Int = 3): DataFrame = CacheScope.pass {
     val spark = batch.sparkSession
     // two consumers (signatures + verification side 1): shingle once
-    val batchSh = cacheShared(batch.select(col(idCol).as("id"),
+    val batchSh = CacheScope.persist(batch.select(col(idCol).as("id"),
       TextOps.wordShingles(col(textCol), shingleSize).as("g")))
     val batchPost = bandedSignaturePostings(
       minhashSignaturesMd5(batchSh, numHashes), "id", numHashes, bands)
       .select(col("id").as("batch_id"), col("band"), col("bucket"))
-      .transform(cacheShared)
+      .transform(CacheScope.persist)
     // ≤ 2^prefixBits values by construction — always driver-safe to collect
     val pfxs = batchPost.select(col("bucket").bitwiseAND(
       readPrefixMask(spark, indexPath)).as("pfx")).distinct()
@@ -620,7 +540,7 @@ object Dedup {
     val cands = index
       .join(broadcast(batchPost), Seq("band", "bucket"))
       .select(col("batch_id"), col("id").as("corpus_id")).distinct()
-      .transform(cacheShared)
+      .transform(CacheScope.persist)
     // verification re-shingles ONLY candidate corpus rows
     val candIds = cands.select(col("corpus_id")).distinct()
       .withColumnRenamed("corpus_id", "__graft_cand_id")
@@ -655,14 +575,14 @@ object Dedup {
       threshold: Double = 0.5,
       numHashes: Int = 64,
       bands: Int = 16,
-      shingleSize: Int = 3): DataFrame = newCacheScope {
+      shingleSize: Int = 3): DataFrame = CacheScope.pass {
     // one shingle computation shared by signature and verification; grams
     // carried as 64-bit hashes (primitive arrays intersect/join faster);
     // persisted so the shingling stage executes once, not per consumer
     val shingled = df.select(col(idCol).as("id"),
       transform(TextOps.wordShingles(col(textCol), shingleSize),
         s => xxhash64(s)).as("g"))
-      .transform(cacheShared)
+      .transform(CacheScope.persist)
     val withSig = minhashSignatures(shingled, numHashes)
     val candidates = lshCandidatePairs(withSig, "id", numHashes, bands)
     val g1 = shingled.toDF("id1", "g1")
@@ -692,7 +612,7 @@ object Dedup {
       k: Int = 5,
       w: Int = 4,
       minShared: Int = 2,
-      maxDocFrequency: Long = Long.MaxValue): DataFrame = newCacheScope {
+      maxDocFrequency: Long = Long.MaxValue): DataFrame = CacheScope.pass {
     val raw = df.select(col(idCol).as("id"),
       explode(array_distinct(
         graft.functions.WinnowFingerprints.fingerprints(col(textCol), k, w))).as("fp"))
@@ -732,7 +652,7 @@ object Dedup {
       k: Int = 5,
       w: Int = 4,
       minShared: Int = 2,
-      maxDocFrequency: Long = Long.MaxValue): DataFrame = newCacheScope {
+      maxDocFrequency: Long = Long.MaxValue): DataFrame = CacheScope.pass {
     fingerprintPairs(winnowFingerprintsPortable(df, textCol, idCol, k, w),
       minShared, maxDocFrequency)
   }
@@ -751,7 +671,7 @@ object Dedup {
           .filter(col("df") > maxDocFrequency).select("fp").toDF("hot_fp")
         raw.join(hot, col("fp") === col("hot_fp"), "left_anti")
       }
-    val fps = cacheShared(capped)
+    val fps = CacheScope.persist(capped)
     val a = fps.toDF("id1", "fp")
     val b = fps.toDF("id2", "fp")
     a.join(b, Seq("fp")).where(col("id1") < col("id2"))
@@ -1104,8 +1024,8 @@ object Dedup {
       vecCol: String,
       idCol: String,
       centroids: Array[Array[Double]],
-      threshold: Double): DataFrame = newCacheScope {
-    val clustered = cacheShared(Ivf.withCluster(df, vecCol, centroids))
+      threshold: Double): DataFrame = CacheScope.pass {
+    val clustered = CacheScope.persist(Ivf.withCluster(df, vecCol, centroids))
     val sides = clustered.select(col("cluster"), col(idCol).as("id"),
       col(vecCol).as("v"), Ann.norm(col(vecCol)).as("nrm"))
     val a = sides.toDF("cluster", "id1", "v1", "nrm1")
@@ -1160,7 +1080,7 @@ object Dedup {
       textCol: String,
       idCol: String,
       minLength: Int = 40,
-      portable: Boolean = false): DataFrame = newCacheScope {
+      portable: Boolean = false): DataFrame = CacheScope.pass {
     val L = minLength
     require(L >= 1, s"minLength must be >= 1, got $L")
     import org.apache.spark.sql.expressions.Window
@@ -1179,7 +1099,7 @@ object Dedup {
     // the postings rather than re-running the scan + explode for each. The
     // production (hashed) postings are three longs per position; the
     // portable family pays the same L× payload here as everywhere else.
-    val grams = cacheShared(positions.select(col("id"), col("pos"), gramKey.as("g")))
+    val grams = CacheScope.persist(positions.select(col("id"), col("pos"), gramKey.as("g")))
     // toDF breaks the aggregate→semi-join lineage (fresh attribute IDs;
     // same pattern as jaccardPairs' hot-shingle anti-join)
     val dup = grams.groupBy("g").agg(count(lit(1)).as("c"))

@@ -75,11 +75,11 @@ object Graph {
       broadcastNodeLimit: Long = 4000000L,
       edgesDistinct: Boolean = false,
       symmetrize: Boolean = false,
-      assumeSmallGraph: Option[Boolean] = None): DataFrame = Dedup.newCacheScope {
+      assumeSmallGraph: Option[Boolean] = None): DataFrame = CacheScope.pass {
     require(iters >= 0, s"iters must be >= 0, got $iters")
     val raw = edges.select(col("src").cast("long").as("src"),
       col("dst").cast("long").as("dst"))
-    val oneDir = Dedup.cacheShared(if (edgesDistinct) raw else raw.distinct())
+    val oneDir = CacheScope.persist(if (edgesDistinct) raw else raw.distinct())
     // the symmetric view reads the cached base twice — never the caller plan
     val e =
       if (symmetrize)
@@ -101,7 +101,7 @@ object Graph {
       // this replaces `iters` contribution shuffles (whose map-side
       // partial aggregation stops reducing once |V| ≫ rows-per-task) with
       // the one partitioned cache fill.
-      val eD = Dedup.cacheShared(
+      val eD = CacheScope.persist(
         e.repartition(shufflePartitions(edges), col("dst")))
       val degN = eD.groupBy(col("dst").as("node"))
         .agg(count(lit(1)).as("outdeg"))
@@ -134,14 +134,14 @@ object Graph {
     val degSmall =
       if (symmetrize) false // symSmall above covers the small case
       else assumeSmallGraph.getOrElse(deg.count() <= broadcastNodeLimit)
-    val ed = Dedup.cacheShared(
+    val ed = CacheScope.persist(
       if (degSmall) e.join(broadcast(deg), "src")
       else e.join(deg, "src"))
     // a symmetrized graph's node set IS deg's keyset (every node appears as
     // a src), so the 2·|E|-row union+distinct shuffle and its extra count
     // job vanish; only a genuinely directed graph pays them (sink nodes
     // never appear as src)
-    val nodes = Dedup.cacheShared(
+    val nodes = CacheScope.persist(
       if (symmetrize) deg.select(col("src").as("node"))
       else e.select(col("src").as("node"))
         .union(e.select(col("dst").as("node"))).distinct())
@@ -201,12 +201,12 @@ object Graph {
       broadcastNodeLimit: Long = 4000000L,
       edgesDistinct: Boolean = false,
       symmetrize: Boolean = false,
-      assumeSmallGraph: Option[Boolean] = None): DataFrame = Dedup.newCacheScope {
+      assumeSmallGraph: Option[Boolean] = None): DataFrame = CacheScope.pass {
     require(iters >= 0, s"iters must be >= 0, got $iters")
     require(checkpointEvery > 0, s"checkpointEvery must be > 0, got $checkpointEvery")
     val raw = edges.select(col("src").cast("long").as("src"),
       col("dst").cast("long").as("dst"))
-    val oneDir = Dedup.cacheShared(if (edgesDistinct) raw else raw.distinct())
+    val oneDir = CacheScope.persist(if (edgesDistinct) raw else raw.distinct())
     val e =
       if (symmetrize)
         oneDir.union(oneDir.select(col("dst").as("src"), col("src").as("dst")))
@@ -226,7 +226,7 @@ object Graph {
       // the teleport re-join is an INNER join from the contribution side
       // against ONE reused (node, outdeg, seed) broadcast instead of a
       // fresh per-superstep broadcast of the contributions.
-      val eD = Dedup.cacheShared(
+      val eD = CacheScope.persist(
         e.repartition(shufflePartitions(edges), col("dst")))
       val seedN = eD.groupBy(col("dst").as("node"))
         .agg(count(lit(1)).as("outdeg"))
@@ -253,7 +253,7 @@ object Graph {
     val degSmall =
       if (symmetrize) false // symSmall above covers the small case
       else assumeSmallGraph.getOrElse(deg.count() <= broadcastNodeLimit)
-    val ed = Dedup.cacheShared(
+    val ed = CacheScope.persist(
       if (degSmall) e.join(broadcast(deg), "src")
       else e.join(deg, "src"))
     val nodes =
@@ -265,7 +265,7 @@ object Graph {
       else assumeSmallGraph.getOrElse(nodes.count() <= broadcastNodeLimit)
     def rankSide(df: DataFrame): DataFrame = if (smallGraph) broadcast(df) else df
     // seed flag rides the node table — one join at setup, zero per superstep
-    val nodesSeeded = Dedup.cacheShared(
+    val nodesSeeded = CacheScope.persist(
       nodes.join(rankSide(seedSet), Seq("node"), "left")
         .select(col("node"), coalesce(col("__graft_is_seed"), lit(0L)).as("seed")))
     var ranks = nodesSeeded.select(col("node"), (col("seed") * scale).as("r"))
@@ -324,9 +324,9 @@ object Graph {
       maxHops: Int,
       broadcastNodeLimit: Long = 4000000L,
       symmetrize: Boolean = false,
-      assumeSmallFrontier: Option[Boolean] = None): DataFrame = Dedup.newCacheScope {
+      assumeSmallFrontier: Option[Boolean] = None): DataFrame = CacheScope.pass {
     require(maxHops >= 0, s"maxHops must be >= 0, got $maxHops")
-    val oneDir = Dedup.cacheShared(
+    val oneDir = CacheScope.persist(
       edges.select(col("src").cast("long").as("src"),
         col("dst").cast("long").as("dst")).distinct())
     // the symmetric view reads the cached base twice — never the caller plan
@@ -344,14 +344,14 @@ object Graph {
     // so there the partitioned copy would be pure overhead: keep e0.
     val e =
       if (assumeSmallFrontier.contains(true)) e0
-      else Dedup.cacheShared(
+      else CacheScope.persist(
         e0.repartition(shufflePartitions(edges), col("src"))
           .sortWithinPartitions("src"))
     val measure = assumeSmallFrontier.isEmpty
     def gate(df: DataFrame, n: => Long): DataFrame =
       if (assumeSmallFrontier.getOrElse(n <= broadcastNodeLimit)) broadcast(df)
       else df
-    var labeled = Dedup.cacheShared(
+    var labeled = CacheScope.persist(
       sources.select(col("node").cast("long").as("node"))
         .distinct().withColumn("dist", lit(0L)))
     var frontier = labeled.select("node")
@@ -362,7 +362,7 @@ object Graph {
     var reached = fCount
     var d = 1
     while (d <= maxHops && !(measure && fCount == 0L)) {
-      val next = Dedup.cacheShared(
+      val next = CacheScope.persist(
         gate(frontier, fCount).join(e, col("node") === col("src"))
           .select(col("dst").as("node")).distinct()
           .join(gate(labeled.select("node"), reached), Seq("node"), "left_anti")
@@ -417,12 +417,12 @@ object Graph {
       checkpointEvery: Int = 8,
       broadcastNodeLimit: Long = 4000000L,
       symmetrize: Boolean = false,
-      assumeSmallGraph: Option[Boolean] = None): DataFrame = Dedup.newCacheScope {
+      assumeSmallGraph: Option[Boolean] = None): DataFrame = CacheScope.pass {
     require(iters >= 0, s"iters must be >= 0, got $iters")
     require(checkpointEvery > 0, s"checkpointEvery must be > 0, got $checkpointEvery")
     val raw = edges.select(col("src").cast("long").as("src"),
       col("dst").cast("long").as("dst"))
-    val oneDir = Dedup.cacheShared(raw.distinct())
+    val oneDir = CacheScope.persist(raw.distinct())
     val e0 =
       if (symmetrize)
         oneDir.union(oneDir.select(col("dst").as("src"), col("src").as("dst")))
@@ -442,7 +442,7 @@ object Graph {
       // pipeline: cache scan → BHJ(labels) → hash agg → BHJ(labels) →
       // least(); the eager localCheckpoint then materializes it (the
       // plan-truncation the recurrence needs anyway — see above).
-      val eD = Dedup.cacheShared(
+      val eD = CacheScope.persist(
         e0.repartition(shufflePartitions(edges), col("dst")))
       var labels = eD.select(col("dst").as("node")).distinct()
         .withColumn("label", col("node"))
@@ -458,8 +458,8 @@ object Graph {
       }
       labels
     } else {
-    val e = Dedup.cacheShared(e0)
-    val nodes = Dedup.cacheShared(
+    val e = CacheScope.persist(e0)
+    val nodes = CacheScope.persist(
       e.select(col("src").as("node"))
         .union(e.select(col("dst").as("node"))).distinct())
     val small =
@@ -504,7 +504,7 @@ object Graph {
     * one action, so an explicit cache + a degree-table broadcast (with its
     * sizing count job) measured 1.4× SLOWER at sf0.1 (r16 A/B, min-of-6
     * interleaved runs). */
-  def triangleCounts(edges: DataFrame): DataFrame = Dedup.newCacheScope {
+  def triangleCounts(edges: DataFrame): DataFrame = CacheScope.pass {
     val und = edges.select(
         least(col("src").cast("long"), col("dst").cast("long")).as("a"),
         greatest(col("src").cast("long"), col("dst").cast("long")).as("b"))
@@ -513,7 +513,7 @@ object Graph {
     val deg = und.select(col("a").as("node")).union(und.select(col("b").as("node")))
       .groupBy("node").agg(count(lit(1)).as("deg"))
     // orient by (deg, id): lower endpoint -> higher endpoint
-    val oriented = Dedup.cacheShared(
+    val oriented = CacheScope.persist(
       und.join(deg.select(col("node").as("a"), col("deg").as("da")), "a")
         .join(deg.select(col("node").as("b"), col("deg").as("db")), "b")
         .select(

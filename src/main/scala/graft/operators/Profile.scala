@@ -663,7 +663,7 @@ object Profile {
     * window), never the result — bucketing is a pure partitioning of the
     * value order. */
   def ksStatisticByGroup(df1: DataFrame, col1: String, df2: DataFrame, col2: String,
-      groupCol: String, buckets: Int = 1024): DataFrame = Dedup.newCacheScope {
+      groupCol: String, buckets: Int = 1024): DataFrame = CacheScope.pass {
     require(buckets > 0, s"buckets must be positive, got $buckets")
     def side(df: DataFrame, c: String, one: Int) =
       df.select(col(groupCol).cast("string").as("g"), col(c).cast("double").as("v"))
@@ -690,7 +690,7 @@ object Profile {
     * neither input. */
   def ksStatisticByGroupTagged(df: DataFrame, valueCol: String,
       groupCol: String, side2: Column, buckets: Int = 1024): DataFrame =
-    Dedup.newCacheScope {
+    CacheScope.pass {
       require(buckets > 0, s"buckets must be positive, got $buckets")
       val tagged = df
         .select(col(groupCol).cast("string").as("g"),
@@ -707,7 +707,7 @@ object Profile {
   private def ksByGroupFromSides(spark: org.apache.spark.sql.SparkSession,
       sides: DataFrame, groupCol: String, buckets: Int): DataFrame = {
     import spark.implicits._
-    val perV = Dedup.cacheShared(
+    val perV = CacheScope.persist(
       sides.groupBy("g", "v").agg(sum(col("c1")).as("c1"), sum(col("c2")).as("c2")))
     val stats = perV.groupBy("g")
       .agg(min(col("v")).as("mn"), max(col("v")).as("mx"),
@@ -726,7 +726,7 @@ object Profile {
     val bucketCol = when(col("__mx") === col("__mn"), lit(0L)).otherwise(
       greatest(least(floor((col("v") - col("__mn")) / width),
         lit((effBuckets - 1).toDouble)), lit(0.0)).cast("long"))
-    val bucketed = Dedup.cacheShared(
+    val bucketed = CacheScope.persist(
       perV.join(broadcast(bstats), Seq("g")).withColumn("__b", bucketCol))
     val perBucket = bucketed.groupBy("g", "__b")
       .agg(sum(col("c1")).as("s1"), sum(col("c2")).as("s2"))
@@ -741,7 +741,7 @@ object Profile {
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy("g", "__b").orderBy("v")
       .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, 0)
-    val dev = Dedup.cacheShared(
+    val dev = CacheScope.persist(
       bucketed.join(broadcast(offsets), Seq("g", "__b"))
         .withColumn("__r1", col("o1") + sum(col("c1")).over(w))
         .withColumn("__r2", col("o2") + sum(col("c2")).over(w))
@@ -770,7 +770,7 @@ object Profile {
       KsMaxDriverRows / math.max(groups, 1)).toInt)
 
   def ksStatistic(df1: DataFrame, col1: String, df2: DataFrame, col2: String,
-      buckets: Int = 1024): DataFrame = Dedup.newCacheScope {
+      buckets: Int = 1024): DataFrame = CacheScope.pass {
     require(buckets > 0, s"buckets must be positive, got $buckets")
     def side(df: DataFrame, c: String, one: Int) =
       df.select(col(c).cast("double").as("v")).where(col("v").isNotNull)
@@ -786,7 +786,7 @@ object Profile {
     * `ksStatistic(df.where(!side2), c, df.where(side2), c)` at half the
     * input scans when both samples slice the same source (guide §1.2/§2.3). */
   def ksStatisticTagged(df: DataFrame, valueCol: String, side2: Column,
-      buckets: Int = 1024): DataFrame = Dedup.newCacheScope {
+      buckets: Int = 1024): DataFrame = CacheScope.pass {
     require(buckets > 0, s"buckets must be positive, got $buckets")
     val tagged = df
       .select(col(valueCol).cast("double").as("v"), side2.as("__s2"))
@@ -802,7 +802,7 @@ object Profile {
   private def ksFromSides(spark: org.apache.spark.sql.SparkSession,
       sides: DataFrame, buckets: Int): DataFrame = {
     import spark.implicits._
-    val perV = Dedup.cacheShared(
+    val perV = CacheScope.persist(
       sides.groupBy("v").agg(sum(col("c1")).as("c1"), sum(col("c2")).as("c2")))
     val mm = perV.agg(min(col("v")).as("mn"), max(col("v")).as("mx"),
       sum(col("c1")).as("n1"), sum(col("c2")).as("n2")).first()
@@ -815,7 +815,7 @@ object Profile {
       if (mx == mn) lit(0L)
       else greatest(least(floor((col("v") - lit(mn)) / lit(width)),
         lit((buckets - 1).toDouble)), lit(0.0)).cast("long")
-    val bucketed = Dedup.cacheShared(perV.withColumn("__b", bucketCol))
+    val bucketed = CacheScope.persist(perV.withColumn("__b", bucketCol))
     // phase A: per-bucket side counts → driver prefix scan → exclusive bases
     val perBucket = bucketed.groupBy("__b")
       .agg(sum(col("c1")).as("s1"), sum(col("c2")).as("s2"))

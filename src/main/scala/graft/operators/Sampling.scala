@@ -84,10 +84,10 @@ object Sampling {
     val rawComps = Dedup.connectedComponents(pairs.select(col("id1"), col("id2")))
       .toDF("__graft_cs_id", "__graft_cs_rep")
     // the size probe and the join read the component table once each —
-    // cache it (pass-scoped registry, released by the next pass) so the
+    // cache it (in the pass scope, released by the next pass) so the
     // component computation never runs twice
     val comps =
-      if (assumeSmallClusters.isDefined) rawComps else Dedup.cacheShared(rawComps)
+      if (assumeSmallClusters.isDefined) rawComps else CacheScope.persist(rawComps)
     val small = assumeSmallClusters.getOrElse(
       comps.count() <= broadcastComponentLimit)
     val compSide = if (small) broadcast(comps) else comps

@@ -49,7 +49,7 @@ object Selection {
       idCol: String,
       budget: Long,
       numBuckets: Int = 1024,
-      scoreRange: Option[(Double, Double)] = None): DataFrame = Dedup.newCacheScope {
+      scoreRange: Option[(Double, Double)] = None): DataFrame = CacheScope.pass {
     require(budget >= 0, "budget must be non-negative")
     require(numBuckets > 0, "numBuckets must be positive")
     val score = col(scoreCol)
@@ -59,10 +59,10 @@ object Selection {
     }
     // the algorithm is inherently multi-pass (range, bucket summaries,
     // final selection, often an orderBy downstream) — persist the filtered
-    // frame so the caller's scoring expressions evaluate once, not 4-6×;
-    // scoped like the dedup postings caches (released per pass / by the
-    // harness between queries)
-    val s = Dedup.cacheShared(
+    // frame so the caller's scoring expressions evaluate once, not 4-6×,
+    // in the pass scope (released by the next pass / by the harness
+    // between queries)
+    val s = CacheScope.persist(
       docs.where(score.isNotNull && col(tokensCol).isNotNull &&
         (if (floating) !isnan(score) else lit(true))))
     val (lo, hi) = scoreRange.getOrElse {
@@ -132,7 +132,7 @@ object Selection {
       idCol: String,
       budget: Long,
       numBuckets: Int = 1024,
-      scoreRange: Option[(Double, Double)] = None): DataFrame = Dedup.newCacheScope {
+      scoreRange: Option[(Double, Double)] = None): DataFrame = CacheScope.pass {
     require(groupCols.nonEmpty, "selectByBudgetPerGroup needs group columns")
     require(budget >= 0, "budget must be non-negative")
     require(numBuckets > 0, "numBuckets must be positive")
@@ -142,7 +142,7 @@ object Selection {
       case DoubleType | FloatType => true
       case _ => false
     }
-    val s = Dedup.cacheShared(
+    val s = CacheScope.persist(
       docs.where(score.isNotNull && col(tokensCol).isNotNull &&
         (if (floating) !isnan(score) else lit(true))))
     val (lo, hi) = scoreRange.getOrElse {

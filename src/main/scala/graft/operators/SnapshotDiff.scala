@@ -42,7 +42,7 @@ object SnapshotDiff {
       .otherwise(concat(lit("V").cast("binary"), c.cast("binary"))))
 
   def diff(a: DataFrame, b: DataFrame, idCol: String,
-      contentCol: String): DataFrame = Dedup.newCacheScope {
+      contentCol: String): DataFrame = CacheScope.pass {
     val idType = a.schema(idCol).dataType
     val nullOld = lit(null).cast(idType)
     val ha = a.select(col(idCol).as("__id"),
@@ -53,7 +53,7 @@ object SnapshotDiff {
     // this frame — uncached, the full-outer join (and both upstream
     // content-hash scans) ran three times; the cache holds only
     // (id, 32-byte hash, 32-byte hash) rows, never the content
-    val j = Dedup.cacheShared(ha.join(hb, Seq("__id"), "full_outer"))
+    val j = CacheScope.persist(ha.join(hb, Seq("__id"), "full_outer"))
     val changed = j
       .where(col("__ha").isNotNull && col("__hb").isNotNull && col("__ha") =!= col("__hb"))
       .select(col("__id").as("id"), lit("changed").as("status"), nullOld.as("old_id"))
@@ -68,7 +68,7 @@ object SnapshotDiff {
     // cached: consumed by the renamed projection AND both anti-joins —
     // uncached, the hash-pairing join (leaver/arrival groupings included)
     // ran three times
-    val pairs = Dedup.cacheShared(rg.join(ag, "h")
+    val pairs = CacheScope.persist(rg.join(ag, "h")
       .where(col("nr") === 1 && col("na") === 1)
       .select(col("aid").as("id"), col("rid").as("old_id")))
     val renamed = pairs.select(col("id"), lit("renamed").as("status"), col("old_id"))

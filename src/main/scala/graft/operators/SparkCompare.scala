@@ -4,9 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
-import org.apache.spark.storage.StorageLevel
 
-import graft.functions.{CompareOpts, ComparatorPipeline, TypeClasses}
+import graft.functions.{CompareFunctions, CompareOpts, ComparatorPipeline, TypeClasses}
 
 /** Compare two DataFrames joined on null-safe keys, producing unique-row
   * slices, per-column match statistics, mismatch samples, and reports.
@@ -237,24 +236,21 @@ class SparkCompare(
       rank): _*)
   }
 
-  /** Whether this compare persisted [[mergedCached]]; only the root of a
-    * family of tolerance variants ever does. */
-  @volatile private var persisted = false
+  /** Owns the cached join; the root's is shared with every tolerance
+    * variant derived from it. */
+  private val scope: CacheScope = parent.fold(new CacheScope)(_.scope)
 
-  /** The merged outer join, persisted when cacheIntermediates, for the
-    * readers that read it again: the derived frames (intersection, both
-    * unique-row slices, `sampleMismatch`, `allMismatch`), a stats pass read
-    * on its own, and tolerance variants, which share it by reference. The
-    * first of them to run an action fills it. A report on a compare nothing
-    * has read yet never forces it (see [[sampleTables]]), so the CLI's one
-    * report writes no cache. (The reference caches only intersect_rows,
-    * spark.py:532-535 — its unique-row slices re-run the join per action.) */
-  private lazy val mergedCached: DataFrame = parent.map(_.mergedCached).getOrElse {
-    if (config.cacheIntermediates) {
-      persisted = true
-      merged.persist(StorageLevel.MEMORY_AND_DISK)
-    } else merged
-  }
+  /** The merged outer join, persisted into [[scope]] when
+    * cacheIntermediates, for the readers that read it again: the derived
+    * frames (intersection, both unique-row slices, `sampleMismatch`,
+    * `allMismatch`), a stats pass read on its own, and tolerance variants,
+    * which share it by reference. The first of them to run an action fills
+    * it. A report on a compare nothing has read yet never forces it (see
+    * [[sampleTables]]), so the CLI's one report writes no cache. (The
+    * reference caches only intersect_rows, spark.py:532-535 — its
+    * unique-row slices re-run the join per action.) */
+  private lazy val mergedCached: DataFrame = parent.map(_.mergedCached).getOrElse(
+    if (config.cacheIntermediates) scope.persist(merged) else merged)
 
   /** left_only / right_only / both counts, folded into the single stats
     * pass ([[statsRow]] aggregates the whole cached join with `_merge`
@@ -377,21 +373,6 @@ class SparkCompare(
         customComparators = customComparators), Some(this))
   }
 
-  /** Double-valued view of a column for max-diff purposes, or None when the
-    * type has no sensible numeric view (arrays short-circuit to 0 in the
-    * reference too, spark.py:1046-1050). Temporal types go through epoch
-    * seconds explicitly — the reference's `TRY_CAST(ts AS DOUBLE)` silently
-    * NULLs under ANSI mode (Spark 4 default), losing the diff. */
-  private def maxDiffView(c: Column, dt: DataType): Option[Column] = dt match {
-    case _: NumericType | _: StringType | BooleanType => Some(c.try_cast(DoubleType))
-    case TimestampType | TimestampNTZType =>
-      // NTZ → TZ interprets in the session time zone (UTC here), matching
-      // DuckDB's epoch_us over naive timestamps.
-      Some(unix_micros(c.cast(TimestampType)).cast(DoubleType) / lit(1e6))
-    case DateType => Some(unix_date(c).cast(DoubleType) * lit(86400.0))
-    case _ => None
-  }
-
   // Field names inside the fused stats row.
   private def fMatch(c: String) = s"__match_$c"
   private def fNullDiff(c: String) = s"__nulldiff_$c"
@@ -418,22 +399,11 @@ class SparkCompare(
       // XOR-null count (reference: spark.py:1070-1111, one job per column).
       val nullDiffExpr =
         sum(when(isBoth && (c1.isNull =!= c2.isNull), 1L).otherwise(0L)).as(fNullDiff(c))
-      // Max |a-b| over try_cast doubles, NaN excluded
-      // (reference: spark.py:1026-1067, one job per column).
-      val t1 = df1.schema(c).dataType
-      val t2 = df2.schema(c).dataType
-      (maxDiffView(c1, t1), maxDiffView(c2, t2)) match {
-        case (Some(v1), Some(v2)) =>
-          val d = abs(v1 - v2)
-          // Byte-equal strings (`StringType` is the binary collation) give a
-          // diff of 0, NaN or NULL, none of which raises the max (NULL reads
-          // as 0.0), so only unequal string pairs pay for the double cast,
-          // which fails row by row on non-numeric text.
-          val differ = if (t1 == StringType && t2 == StringType) c1 =!= c2 else lit(true)
-          Seq(matchExpr, nullDiffExpr, max(when(isBoth && differ && !isnan(d), d)).as(fMaxDiff(c)))
-        case _ =>
-          Seq(matchExpr, nullDiffExpr)
-      }
+      // Max |a-b| over the intersection (reference: spark.py:1026-1067,
+      // one job per column).
+      val maxDiffExpr = CompareFunctions.maxDiff(
+        c1, df1.schema(c).dataType, c2, df2.schema(c).dataType, Some(isBoth))
+      Seq(matchExpr, nullDiffExpr) ++ maxDiffExpr.map(_.as(fMaxDiff(c)))
     }
     val allMatchCond =
       if (compareColumns.isEmpty) lit(true)
@@ -472,12 +442,7 @@ class SparkCompare(
   }
   private def statMaxDiff(c: String): Double = {
     val idx = try Some(statsRow.fieldIndex(fMaxDiff(c))) catch { case _: IllegalArgumentException => None }
-    idx match {
-      case Some(i) if !statsRow.isNullAt(i) =>
-        val v = statsRow.getDouble(i)
-        if (v.isNaN) 0.0 else v
-      case _ => 0.0
-    }
+    idx.fold(0.0)(CompareFunctions.maxDiffValue(statsRow, _))
   }
 
   lazy val intersectCount: Long = statLong("__graft_cnt")
@@ -645,10 +610,11 @@ class SparkCompare(
     * tables the stats select: two jobs (AQE map stage plus result) however
     * many columns mismatch, none when nothing needs sampling.
     *
-    * On a compare nothing has read yet, the query reads the uncached join,
-    * tags every table the stats could select, and carries the stats pass
-    * as a second branch of one `union`; the tables the stats select are
-    * rendered after it returns. AQE plans the join's input exchange once
+    * On a root compare with no stats and no cache held (nothing has read
+    * it yet, or `unpersist()` released what a derived frame filled), the
+    * query reads the uncached join, tags every table the stats could
+    * select, and carries the stats pass as a second branch of one `union`;
+    * the tables the stats select are rendered after it returns. AQE plans the join's input exchange once
     * and the second branch reads it as a `ReusedExchange`, so the report
     * costs one input shuffle and writes no cache. Exchange reuse
     * needs both branches to prune the join to the same columns, so the
@@ -659,7 +625,7 @@ class SparkCompare(
     * which a re-run map stage may count twice. */
   private def sampleTables(sampleCount: Int, columnCount: Int): SparkCompare.Samples = synchronized {
     import graft.report.TextTable
-    val fused = parent.isEmpty && statsMemo.isEmpty && !persisted
+    val fused = parent.isEmpty && statsMemo.isEmpty && scope.isEmpty
     def mismatching = columnStats.filter(s => !s.allMatch && s.unequalCnt > 0).map(_.column)
     // The tables the query collects rows for; a fused query cannot yet
     // tell which of them the stats select.
@@ -766,9 +732,10 @@ class SparkCompare(
     text
   }
 
-  /** Release the cached join (shared with tolerance variants), if one was
-    * persisted; a compare whose join was never cached registers nothing. */
-  def unpersist(): Unit = parent.fold(if (persisted) mergedCached.unpersist())(_.unpersist())
+  /** Release the cached join, blocking, on this compare and every
+    * tolerance variant sharing it; a no-op when nothing was persisted or
+    * it was already released. */
+  def unpersist(): Unit = scope.release()
 }
 
 object SparkCompare {

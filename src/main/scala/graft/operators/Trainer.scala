@@ -46,12 +46,12 @@ object Trainer {
   def trainHashedLinearModel(
       df: DataFrame, textCol: String, idCol: String, labelCol: String,
       numFeatures: Int, iters: Int,
-      scale: Long = 1000000L, lrDen: Long = 256L): DataFrame = Dedup.newCacheScope {
+      scale: Long = 1000000L, lrDen: Long = 256L): DataFrame = CacheScope.pass {
     require(numFeatures > 0, s"numFeatures must be > 0, got $numFeatures")
     require(iters >= 1, s"iters must be >= 1, got $iters")
     require(scale > 0 && scale % 2 == 0, s"scale must be positive and even, got $scale")
     require(lrDen > 0, s"lrDen must be > 0, got $lrDen")
-    val feats = Dedup.cacheShared(
+    val feats = CacheScope.persist(
       df.select(col(idCol).as("id"), col(labelCol).cast("long").as("y"),
         explode(split(trim(col(textCol)), "\\s+")).as("t"))
         .select(col("id"), col("y"),

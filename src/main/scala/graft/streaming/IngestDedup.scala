@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, Dataset, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
-import graft.operators.Dedup
+import graft.operators.{CacheScope, Dedup}
 import graft.sources.{BucketedCorpus, Compaction}
 
 /** Continuous corpus ingest with incremental deduplication — the streaming
@@ -152,8 +152,8 @@ object IngestDedup {
       // thread-scoped: drop only THIS batch's postings caches — the global
       // drain would evict caches that concurrent queries on sibling
       // verify-pool threads are mid-read (the cross-thread recomputation
-      // storm the per-thread registry exists to prevent)
-      Dedup.releaseOwnCaches()
+      // storm per-thread pass scopes exist to prevent)
+      CacheScope.releaseOwn()
     }
   }
 }

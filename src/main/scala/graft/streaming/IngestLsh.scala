@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, Dataset, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
-import graft.operators.{Ann, Dedup}
+import graft.operators.{Ann, CacheScope, Dedup}
 import graft.sources.{BucketedCorpus, Compaction}
 
 /** Continuous EMBEDDING ingest with incremental cosine near-duplicate
@@ -147,7 +147,7 @@ object IngestLsh {
       } finally survivors.unpersist()
     } finally {
       live.unpersist()
-      Dedup.releaseOwnCaches()
+      CacheScope.releaseOwn()
     }
   }
 }

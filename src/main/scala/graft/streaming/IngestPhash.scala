@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, Dataset, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
-import graft.operators.{Dedup, Multimodal}
+import graft.operators.{CacheScope, Dedup, Multimodal}
 import graft.sources.{BucketedCorpus, Compaction}
 
 /** Continuous MEDIA ingest with incremental perceptual-hash deduplication —
@@ -110,7 +110,7 @@ object IngestPhash {
         else {
           // two consumers (bucket-list collect + existence semi join):
           // cache so the banded probe runs once
-          val dupPairs = Dedup.cacheShared(
+          val dupPairs = CacheScope.persist(
             Multimodal.phashProbeIndex(spark, indexPath, inBatch,
               maxHamming, prefixBits))
           // a matched candidate drops a batch row only if its corpus row
@@ -136,7 +136,7 @@ object IngestPhash {
       } finally survivors.unpersist()
     } finally {
       hashes.unpersist()
-      Dedup.releaseOwnCaches()
+      CacheScope.releaseOwn()
     }
   }
 }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, Dataset, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
-import graft.operators.{Dedup, Multimodal}
+import graft.operators.{CacheScope, Dedup, Multimodal}
 import graft.sources.{BucketedCorpus, Compaction}
 
 /** Continuous VIDEO ingest with incremental multi-frame perceptual
@@ -114,7 +114,7 @@ object IngestVideo {
         else {
           // two consumers (bucket-list collect + existence semi join):
           // cache so the banded probe runs once
-          val dupPairs = Dedup.cacheShared(
+          val dupPairs = CacheScope.persist(
             Multimodal.phashProbeIndex(spark, indexPath,
               inBatch.select(col("cid").as("media_id"), col("phash")),
               maxHamming, prefixBits)
@@ -148,7 +148,7 @@ object IngestVideo {
       } finally survivors.unpersist()
     } finally {
       fh.unpersist()
-      Dedup.releaseOwnCaches()
+      CacheScope.releaseOwn()
     }
   }
 }

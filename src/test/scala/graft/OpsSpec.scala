@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.operators.{Ann, Dedup, TextOps}
+import graft.operators.{Ann, CacheScope, Dedup, TextOps}
 
 /** Training-data pipeline operators: dedup, similarity, text analysis. */
 class OpsSpec extends SparkTestBase {
@@ -1416,7 +1416,7 @@ class OpsSpec extends SparkTestBase {
   }
 
   test("dedup cache scope: a new pass releases the previous pass's postings") {
-    Dedup.releaseCaches()
+    CacheScope.releaseAll()
     val sc = spark.sparkContext
     // count only RDDs persisted SINCE this test's baseline: other tests'
     // dead localCheckpoint RDDs (labelprop/PPR/trainer supersteps) are
@@ -1431,7 +1431,7 @@ class OpsSpec extends SparkTestBase {
     Dedup.jaccardPairs(docs, "text", "doc_id", n = 2, threshold = 0.5).count()
     // second pass auto-released the first's caches before adding its own
     assert(newSince <= afterFirst)
-    Dedup.releaseCaches()
+    CacheScope.releaseAll()
     assert(newSince == 0)
   }
 
@@ -1439,7 +1439,7 @@ class OpsSpec extends SparkTestBase {
     // the concurrent verify sweep's failure mode: query A's pass on thread 1
     // must NOT be evicted when query B starts a pass on thread 2.
     // Since-baseline counting for the same reason as the sibling test.
-    Dedup.releaseCaches()
+    CacheScope.releaseAll()
     val sc = spark.sparkContext
     val base = sc.getPersistentRDDs.keySet
     def newSince = sc.getPersistentRDDs.keySet.diff(base).size
@@ -1453,7 +1453,7 @@ class OpsSpec extends SparkTestBase {
     assert(newSince > afterLocal,
       s"cross-thread pass evicted this thread's caches (newSince=$newSince, before=$afterLocal)")
     // and the global drain still clears everything from every thread
-    Dedup.releaseCaches()
+    CacheScope.releaseAll()
     assert(newSince == 0)
   }
 
